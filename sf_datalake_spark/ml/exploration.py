@@ -287,7 +287,14 @@ def quantile_summary(
             * F.col("__hiv")
         )
     )
-    return agg.select(
+    # An all-NULL or empty column has no group after the isNotNull
+    # filter; the left join onto the static (column x quantile) grid
+    # gives it NULL-valued rows, as the Percentile aggregate did.
+    grid = df.sparkSession.createDataFrame(
+        [(c, i) for c in cols for i in range(len(quantiles))],
+        "column string, __i int",
+    )
+    return grid.join(agg, ["column", "__i"], "left").select(
         "column",
         F.element_at(qarr, F.col("__i") + 1).alias("quantile"),
         value.alias("value"),

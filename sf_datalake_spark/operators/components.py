@@ -639,7 +639,10 @@ def k_core(
     # ``frequent_pairs`` output, unique by its groupBy(item_1, item_2)
     # construction (same contract as label_propagation_sync's flag;
     # pinned by tests/test_graph_batch.py).  Duplicate edges with the
-    # flag off would double-count distributed-path degrees.
+    # flag off would double-count distributed-path degrees.  The flag
+    # also skips the ``u != v`` filter: a self-loop with the flag off
+    # counts toward its vertex's degree on both paths, so the caller's
+    # edge source must also be free of self-loops.
     directed = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
     if dedup_edges:
         directed = (

@@ -64,6 +64,13 @@ _NANOS_CONF = "spark.sql.legacy.parquet.nanosAsLong"
 #: still scans the parquet data pages, so bench/oracle runs compute
 #: from the inputs each time (cache-clearing between runs is
 #: unaffected; there is nothing persisted to clear).
+#:
+#: Static-data contract: an sf dir is immutable for the life of the
+#: application.  The memoized plan keeps the file listing it resolved
+#: first, so a harness that rewrites an sf dir in place within one
+#: application reads a stale listing: removed part files raise
+#: missing-file errors and new ones are silently skipped.  Such a
+#: harness must call ``_T_MEMO.clear()`` after each rewrite.
 _T_MEMO: dict[tuple[str, str, str], DataFrame] = {}
 
 

@@ -109,6 +109,43 @@ def test_one_way_anova_always_emits_p_value(spark):
 
 
 # ---------------------------------------------------------------------------
+# quantile_summary: one row per (column, quantile), even when all-NULL
+# ---------------------------------------------------------------------------
+
+def test_quantile_summary_all_null_and_empty_columns(spark):
+    """An all-NULL column keeps its NULL-valued rows (what the
+    ``Percentile`` aggregate emitted); the other column still matches
+    ``F.percentile``; an empty frame yields the full NULL grid."""
+    from pyspark.sql import functions as F
+
+    from sf_datalake_spark.ml.exploration import quantile_summary
+
+    df = spark.createDataFrame(
+        [(1.0, None), (4.0, None), (2.0, None), (10.0, None)],
+        "a double, b double",
+    )
+    qs = (0.25, 0.5, 0.9)
+    got = {
+        (r["column"], r["quantile"]): r["value"]
+        for r in quantile_summary(df, ["a", "b"], qs).collect()
+    }
+    assert len(got) == 6
+    ref = df.select(
+        *[F.percentile("a", q).alias(str(q)) for q in qs],
+        *[F.percentile("b", q).alias(f"b{q}") for q in qs],
+    ).first()
+    for q in qs:
+        assert got[("a", q)] == ref[str(q)]
+        assert got[("b", q)] is None and ref[f"b{q}"] is None
+
+    empty = quantile_summary(df.filter("a < 0"), ["a", "b"], qs).collect()
+    assert sorted((r["column"], r["quantile"]) for r in empty) == sorted(
+        (c, q) for c in ("a", "b") for q in qs
+    )
+    assert all(r["value"] is None for r in empty)
+
+
+# ---------------------------------------------------------------------------
 # PCA trajectories: one basis (first period), all periods projected
 # ---------------------------------------------------------------------------
 

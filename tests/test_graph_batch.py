@@ -296,3 +296,22 @@ def test_k_core_dedup_edges_contract(spark):
     )
     assert deduped == [(1, 2), (2, 2), (3, 2)]
     assert raw != deduped
+
+    # self-loop: the flag also skips the u != v filter, so (4, 4) lifts
+    # vertex 4 (one real neighbor) into the 2-core on BOTH paths.
+    loop = spark.createDataFrame(
+        [(1, 2), (2, 3), (1, 3), (3, 4), (4, 4)], "u bigint, v bigint"
+    )
+    for threshold in (1_000_000, 0):
+        deduped = sorted(
+            tuple(r)
+            for r in k_core(loop, 2, "u", "v", dedup_edges=True,
+                            driver_threshold=threshold).collect()
+        )
+        raw = sorted(
+            tuple(r)
+            for r in k_core(loop, 2, "u", "v", dedup_edges=False,
+                            driver_threshold=threshold).collect()
+        )
+        assert deduped == [(1, 2), (2, 2), (3, 2)], threshold
+        assert 4 in {r[0] for r in raw}, threshold

@@ -1,6 +1,8 @@
 """Per-query scheduler census: run every registry query once through
 the noop sink inside its own job group and record wall seconds plus
-job / stage / task counts from the status tracker.
+job / stage / task counts from the status tracker, plus the number of
+generated classes Janino compiled (Spark's ``CodegenMetrics`` compile
+count; 0 when every class came from the codegen cache).
 
 Round-10 finding (OPTIMIZATION_r10.md §16): job/stage counts are the
 noise-free structural signal on a co-tenant box — FP throttling can
@@ -14,7 +16,8 @@ probe jobs).
 Usage: python tools/census.py [--sf DIR] [--out FILE] [q1 q2 ...]
 
 Prints one JSON line {"queries": {name: {"wall_s", "jobs", "stages",
-"tasks"}}, ...} and (with --out) writes the same payload indented.
+"tasks", "codegen_compiles"}}, ...} and (with --out) writes the same
+payload indented.
 """
 
 from __future__ import annotations
@@ -60,10 +63,13 @@ def main() -> int:
         print(f"census warmup failed: {e}", file=sys.stderr)
 
     tracker = sc.statusTracker()
+    compiles = sc._jvm.org.apache.spark.metrics.source.CodegenMetrics \
+        .METRIC_COMPILATION_TIME()
     out: dict[str, dict] = {}
     for name, fn in qs.items():
         group = f"census_{name}"
         sc.setJobGroup(group, name)
+        c0 = compiles.getCount()
         t0 = time.perf_counter()
         err = None
         try:
@@ -71,6 +77,7 @@ def main() -> int:
         except Exception as e:
             err = str(e)[:120]
         wall = round(time.perf_counter() - t0, 3)
+        n_compiles = compiles.getCount() - c0
         sc.setJobGroup("census_idle", "idle")
         jobs = tracker.getJobIdsForGroup(group)
         stages = set()
@@ -87,7 +94,8 @@ def main() -> int:
                 if si is not None:
                     tasks += si.numTasks
         rec = {"wall_s": wall, "jobs": len(jobs),
-               "stages": len(stages), "tasks": tasks}
+               "stages": len(stages), "tasks": tasks,
+               "codegen_compiles": n_compiles}
         if err:
             rec["err"] = err
         out[name] = rec
@@ -106,6 +114,8 @@ def main() -> int:
         "total_jobs": sum(r["jobs"] for r in ok.values()),
         "total_stages": sum(r["stages"] for r in ok.values()),
         "total_tasks": sum(r["tasks"] for r in ok.values()),
+        "total_codegen_compiles": sum(
+            r["codegen_compiles"] for r in ok.values()),
         "queries": out,
     }
     print(json.dumps({k: payload[k] for k in payload if k != "queries"}))
