@@ -16,28 +16,33 @@ from pyspark.sql import DataFrame, SparkSession
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from sf_datalake_spark.queries import ORACLES, QUERIES  # noqa: E402
-from sf_datalake_spark.queries_corpus import ORACLES_CORPUS, QUERIES_CORPUS  # noqa: E402
-from sf_datalake_spark.queries_ext import ORACLES_EXT, QUERIES_EXT  # noqa: E402
-from sf_datalake_spark.queries_rel import ORACLES_REL, QUERIES_REL  # noqa: E402
-from sf_datalake_spark.queries_sketch import ORACLES_SKETCH, QUERIES_SKETCH  # noqa: E402
-from sf_datalake_spark.queries_tpch import ORACLES_TPCH, QUERIES_TPCH  # noqa: E402
-from sf_datalake_spark.queries_analytics import ORACLES_ANALYTICS, QUERIES_ANALYTICS  # noqa: E402
-from sf_datalake_spark.queries_mining import ORACLES_MINING, QUERIES_MINING  # noqa: E402
-from sf_datalake_spark.queries_stats import ORACLES_STATS, QUERIES_STATS  # noqa: E402
-from sf_datalake_spark.queries_graph import ORACLES_GRAPH, QUERIES_GRAPH  # noqa: E402
-from sf_datalake_spark.queries_prep import ORACLES_PREP, QUERIES_PREP  # noqa: E402
+from sf_datalake_spark import (  # noqa: E402
+    queries as queries_core,
+    queries_analytics,
+    queries_corpus,
+    queries_ext,
+    queries_graph,
+    queries_mining,
+    queries_prep,
+    queries_rel,
+    queries_sketch,
+    queries_stats,
+    queries_tpch,
+)
 
-# queries_sketch/queries_tpch are merged LAST so their (post-r02)
-# entries append after the fresh-oracled block and cannot displace any
-# of the 50 queries the r03 rotation puts in front of the driver's
-# snapshot cap.
-QUERIES = {**QUERIES, **QUERIES_EXT, **QUERIES_REL, **QUERIES_CORPUS,
-           **QUERIES_SKETCH, **QUERIES_TPCH, **QUERIES_ANALYTICS,
-           **QUERIES_MINING, **QUERIES_STATS, **QUERIES_GRAPH, **QUERIES_PREP}
-ORACLES = {**ORACLES, **ORACLES_EXT, **ORACLES_REL, **ORACLES_CORPUS,
-           **ORACLES_SKETCH, **ORACLES_TPCH, **ORACLES_ANALYTICS,
-           **ORACLES_MINING, **ORACLES_STATS, **ORACLES_GRAPH, **ORACLES_PREP}
+# Each module declares one ordered REGISTRY table: name → (query
+# function, DuckDB oracle SQL, or None for a rows-only query).  Modules
+# merge in the order they were added, so a new module's entries append
+# after every existing one and never reorder the pre-rotation registry.
+QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
+ORACLES: dict[str, str] = {}
+for _mod in (queries_core, queries_ext, queries_rel, queries_corpus,
+             queries_sketch, queries_tpch, queries_analytics,
+             queries_mining, queries_stats, queries_graph, queries_prep):
+    for _name, (_fn, _sql) in _mod.REGISTRY.items():
+        QUERIES[_name] = _fn
+        if _sql is not None:
+            ORACLES[_name] = _sql
 
 # Attestation ledger — DERIVED, not hand-maintained.  The driver caps
 # each round's CORRECTNESS snapshot at the first 50 registry entries,
@@ -96,21 +101,13 @@ def _attestation_state() -> tuple[frozenset, frozenset, frozenset]:
 
 _ATTESTED, _NEEDS_REFIX, _ROWS_ONLY_ATTESTED = _attestation_state()
 
-#: queries added mid-round-5: they yield attestation priority to the
-#: round-4 backlog (154 never-attested names at the start of r05) and
-#: rotate into later windows.
-_NEW_R06 = frozenset({
-    "markov_attribution",
-    "shapley_attribution",
-})
-
 
 def _rotated(allq: dict) -> dict:
     """Order the registry so the driver's 50-entry snapshot attests what
     no prior round saw: names whose latest snapshot was red first (their
-    fix needs re-attestation), then never-attested+oracled (oldest
-    first, this round's additions last), then never-attested rows-only,
-    then the already-attested tail."""
+    fix needs re-attestation), then never-attested+oracled, then
+    never-attested rows-only, then the already-attested tail; registry
+    order within each group."""
     front = [k for k in allq if k in _NEEDS_REFIX]
     # attested only at rows-only strictness but NOW oracled (a
     # conversion landed since the last snapshot): re-attest at hash
@@ -119,13 +116,10 @@ def _rotated(allq: dict) -> dict:
         k for k in allq
         if k in _ROWS_ONLY_ATTESTED and k in ORACLES and k not in front
     ]
-    fresh_oracled = sorted(
-        (
-            k for k in allq
-            if k not in _ATTESTED and k in ORACLES and k not in front
-        ),
-        key=lambda k: k in _NEW_R06,   # stable: older entries keep order
-    )
+    fresh_oracled = [
+        k for k in allq
+        if k not in _ATTESTED and k in ORACLES and k not in front
+    ]
     fresh_rows_only = [
         k for k in allq
         if k not in _ATTESTED and k not in ORACLES and k not in front

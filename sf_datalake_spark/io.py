@@ -187,18 +187,6 @@ def compact_files(
     }
 
 
-def write_explanations(
-    df: DataFrame,
-    path: str,
-    file_format: str = "parquet",
-    num_partitions: int = 1,
-) -> None:
-    """Explanations writer (reference ``io.py:165-191``): persist the
-    micro/macro contribution tables produced by
-    ``ml.explain.linear_contributions`` / ``topic_contributions``."""
-    write_data(df, path, file_format, num_partitions=num_partitions)
-
-
 def write_bucketed(
     df: DataFrame,
     table: str,
@@ -265,12 +253,6 @@ def load_testdata(
         name: spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
         for name in (tables or TESTDATA_TABLES)
     }
-
-
-def register_testdata_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register each testdata table as a temp view for ``spark.sql``."""
-    for name, df in load_testdata(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)
 
 
 def write_predictions(

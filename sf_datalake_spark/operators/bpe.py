@@ -177,43 +177,3 @@ def _distributed_merge_loop(
     finally:
         types.unpersist()
     return spark.createDataFrame(merges, _MERGES_SCHEMA)
-
-
-def bpe_segment(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    merges: DataFrame,
-    output_col: str = "bpe_tokens",
-) -> DataFrame:
-    """Apply a learned merge table: ``(id, bpe_tokens array<string>)``.
-
-    Replays the merge list in rank order with the same greedy left fold
-    used in training, chained per merge over the DISTINCT-token table
-    (apply to types, broadcast-join back, reassemble by position —
-    the fold never runs on the full token stream).
-    """
-    ranked = [
-        (r["left"], r["right"])
-        for r in merges.orderBy("rank").select("left", "right").collect()
-    ]
-    toks = df.select(F.explode(tokenize(F.col(text_col))).alias("w")).distinct()
-    seg = toks.select("w", _chars(F.col("w")).alias("sym"))
-    for left, right in ranked:
-        seg = _apply_merge(seg, left, right)
-    exploded = df.select(
-        F.col(id_col),
-        F.posexplode(tokenize(F.col(text_col))).alias("__p", "w"),
-    )
-    return (
-        exploded.join(F.broadcast(seg), "w")
-        .groupBy(id_col)
-        .agg(
-            F.flatten(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("__p", "sym"))),
-                    lambda s: s["sym"],
-                )
-            ).alias(output_col)
-        )
-    )

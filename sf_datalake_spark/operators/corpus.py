@@ -263,47 +263,6 @@ def gopher_quality_filter(
     return out.withColumn("keep", keep.cast("int"))
 
 
-def observe_gate(gated: DataFrame, name: str = "quality_gate"):
-    """Attach observed metrics to a quality-gate frame: returns
-    ``(df, observation)`` where the Observation yields total docs, docs
-    kept, and per-rule failure counts after the FIRST action on ``df``.
-
-    This is Spark's ``observe()`` API — the counters ride the same
-    pass that materializes the data (accumulator semantics inside the
-    job), so gate monitoring costs ZERO extra scans; the alternative
-    (a separate ``groupBy().agg()`` over the gate output) re-reads the
-    corpus. At 100 TB the difference is a full second pass. The
-    metrics are exact for the completed action regardless of task
-    retries (Spark de-duplicates observed updates per task).
-
-    Spark 4.1 quirk worth knowing: the FIRST ``observe()`` on a
-    session initializes its ``observationManager`` — a lazily-created,
-    non-Java-serializable SparkSession field.  MLlib models keep a
-    ``trainingSummary`` holding their session, so once a session has
-    observed anything, ``model.transform(...)`` closures that capture
-    such a model fail with ``Task not serializable`` (clearing the
-    manager's map does not de-initialize the lazy field, and
-    ``model.copy()`` keeps the summary).  When a workload mixes
-    ``observe()`` with MLlib transforms, build the observed frames on
-    a dedicated ``spark.newSession()`` (shares the SparkContext,
-    isolates the session object) — the repo's test does exactly that.
-    """
-    from pyspark.sql import Observation
-
-    obs = Observation(name)
-    rule_cols = [c for c in gated.columns if c.startswith("r_")]
-    observed = gated.observe(
-        obs,
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("keep").alias("n_kept"),
-        *[
-            F.sum(1 - F.col(c)).alias(f"n_fail_{c[2:]}")
-            for c in rule_cols
-        ],
-    )
-    return observed, obs
-
-
 def quality_prune(
     df: DataFrame,
     score_col: str,

@@ -110,40 +110,3 @@ def frequent_pairs(
         .agg(F.count("*").alias("support"))
         .filter(F.col("support") >= min_support)
     )
-
-
-def pair_lift(
-    pairs: DataFrame,
-    item_supports: DataFrame,
-    n_baskets: int,
-    round_at: int = 6,
-) -> DataFrame:
-    """Association lift per frequent pair.
-
-    ``lift = P(a,b) / (P(a)·P(b)) = support·N / (s_a·s_b)`` — joined
-    from the item-support table (two broadcast-joins when the frequent
-    vocabulary is small), rounded at ``round_at`` so the one float
-    division is oracle-stable.  ``item_supports`` must carry
-    ``(item, support)``.
-    """
-    s = item_supports.select(
-        F.col("item").alias("__it"), F.col("support").alias("__sup")
-    )
-    out = (
-        pairs.join(
-            F.broadcast(s.withColumnRenamed("__it", "item_1")), "item_1"
-        )
-        .withColumnRenamed("__sup", "s1")
-        .join(F.broadcast(s.withColumnRenamed("__it", "item_2")), "item_2")
-        .withColumnRenamed("__sup", "s2")
-    )
-    return out.select(
-        "item_1",
-        "item_2",
-        "support",
-        F.round(
-            F.col("support") * F.lit(float(n_baskets))
-            / (F.col("s1") * F.col("s2")),
-            round_at,
-        ).alias("lift"),
-    )

@@ -664,129 +664,6 @@ def semantic_dedup_pairs(
     return out
 
 
-def semantic_pairs_against(
-    new: DataFrame,
-    stored: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.95,
-    n_clusters: int = 16,
-    seed: int = 42,
-) -> DataFrame:
-    """Incremental SemDeDup: match a NEW embedding batch against a
-    STORED corpus without re-clustering or re-comparing the corpus to
-    itself — the per-batch shape a crawl pipeline actually runs (the
-    embedding twin of :func:`dedup.lsh_pairs_against`).
-
-    KMeans is fit on the STORED side (the model a production pipeline
-    would persist alongside the corpus); both sides are assigned to
-    cells by one broadcast-centroid Arrow pass; a cogrouped per-cell
-    stage computes only the (new × stored-in-cell) cosine block plus
-    the (new × new-in-cell) upper triangle — per-batch cost scales
-    with |batch| · cell occupancy, never |corpus|².
-
-    Output: ``(new_id, match_id, cosine, match_side)`` with
-    ``match_side ∈ {'stored', 'new'}`` (new-new pairs emitted once,
-    ``new_id < match_id``).
-    """
-    import pandas as pd
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    sv = stored.select(
-        F.col(id_col).alias("__id"),
-        F.col(vec_col).alias("__cv"),
-        array_to_vector(F.col(vec_col)).alias("__v"),
-    ).cache()
-    try:
-        model = KMeans(
-            k=n_clusters, seed=seed, featuresCol="__v", maxIter=8
-        ).fit(sv)
-    finally:
-        sv.unpersist()
-    centroids = np.array(
-        [np.asarray(c) for c in model.clusterCenters()], dtype=np.float64
-    )
-    bc = new.sparkSession.sparkContext.broadcast(centroids)
-    id_type = dict(new.dtypes)[id_col]
-
-    def assign(batches):
-        cents = bc.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            X = np.array(list(pdf["__cv"]), dtype=np.float64)
-            d2 = ((X[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
-            out = pdf[["__id", "__cv", "__side"]].copy()
-            out["__cell"] = d2.argmin(axis=1).astype(np.int32)
-            yield out
-
-    def tagged(df, side):
-        return df.select(
-            F.col(id_col).alias("__id"),
-            F.col(vec_col).alias("__cv"),
-            F.lit(side).alias("__side"),
-        )
-
-    vec_type = dict(new.dtypes)[vec_col]
-    both = tagged(new, "new").unionByName(tagged(stored, "stored")).mapInPandas(
-        assign, schema=f"__id {id_type}, __cv {vec_type}, __side string, __cell int"
-    )
-
-    out_schema = (
-        f"new_id {id_type}, match_id {id_type}, cosine double, match_side string"
-    )
-
-    def per_cell(pdf):
-        empty = pd.DataFrame(
-            {"new_id": [], "match_id": [], "cosine": [], "match_side": []}
-        )
-        nmask = (pdf["__side"] == "new").to_numpy()
-        if not nmask.any():
-            return empty
-        ids = pdf["__id"].to_numpy()
-        X = np.array(list(pdf["__cv"]), dtype=np.float64)
-        norms = np.linalg.norm(X, axis=1)
-        norms[norms == 0.0] = 1.0
-        Xn = X / norms[:, None]
-        Nn, Ni = Xn[nmask], ids[nmask]
-        rows = []
-        smask = ~nmask
-        if smask.any():
-            S = Xn[smask] @ Nn.T  # (stored, new) cosine block
-            si = ids[smask]
-            ii, jj = np.nonzero(S.T >= threshold)
-            rows.append(
-                pd.DataFrame(
-                    {
-                        "new_id": Ni[ii],
-                        "match_id": si[jj],
-                        "cosine": S.T[ii, jj],
-                        "match_side": "stored",
-                    }
-                )
-            )
-        if len(Ni) > 1:
-            G = Nn @ Nn.T
-            iu, ju = np.triu_indices(len(Ni), k=1)
-            keep = G[iu, ju] >= threshold
-            a, b = Ni[iu[keep]], Ni[ju[keep]]
-            lo, hi = np.minimum(a, b), np.maximum(a, b)
-            rows.append(
-                pd.DataFrame(
-                    {
-                        "new_id": lo,
-                        "match_id": hi,
-                        "cosine": G[iu[keep], ju[keep]],
-                        "match_side": "new",
-                    }
-                )
-            )
-        return pd.concat(rows) if rows else empty
-
-    return both.groupBy("__cell").applyInPandas(per_cell, schema=out_schema)
-
-
 def _train_pq_codebooks(
     sample: np.ndarray, m: int, n_codes: int, iters: int = 12, seed: int = 42
 ) -> np.ndarray:

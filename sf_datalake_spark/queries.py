@@ -1200,74 +1200,38 @@ _TOPK_SQL = """
 # Registry
 # ---------------------------------------------------------------------------
 
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "pricing_summary": q_pricing_summary,
-    "revenue_by_nation": q_revenue_by_nation,
-    "monthly_panel": q_monthly_panel,
-    "panel_lag": q_panel_lag,
-    "panel_diff": q_panel_diff,
-    "panel_moving_avg": q_panel_moving_avg,
-    "target_variable": q_target_variable,
-    "semi_join_active": q_semi_join_active,
-    "anti_join_inactive": q_anti_join_inactive,
-    "range_join_months": q_range_join_months,
-    "spread_over_months": q_spread_over_months,
-    "key_aggregate": q_key_aggregate,
-    "clip_values": q_clip_values,
-    "null_counts": q_null_counts,
-    "dedup_keep_best": q_dedup_keep_best,
-    "json_extract": q_json_extract,
-    "hash_split": q_hash_split,
-    "daily_ffill": q_daily_ffill,
-    "asof_backward": q_asof_backward,
-    "sessionize": q_sessionize,
-    "interval_union": q_interval_union,
-    "token_stats": q_token_stats,
-    "quality_score": q_quality_score,
-    "language_id": q_language_id,
-    "exact_dedup": q_exact_dedup,
-    "fingerprint": q_fingerprint,
-    "minhash_signature": q_minhash_signature,
-    "minhash_lsh_pairs": q_minhash_lsh_pairs,
-    "lsh_star_capped_pairs": q_lsh_star_capped_pairs,
-    "ngram_jaccard": q_ngram_jaccard,
-    "ngram_jaccard_capped": q_ngram_jaccard_capped,
-    "embedding_topk": q_embedding_topk,
-    "embedding_topk_sharded": q_embedding_topk_sharded,
-}
-
-ORACLES: dict[str, str] = {
-    "pricing_summary": _PRICING_SUMMARY_SQL,
-    "revenue_by_nation": _REVENUE_BY_NATION_SQL,
-    "monthly_panel": _PANEL_SQL,
-    "panel_lag": _PANEL_LAG_SQL,
-    "panel_diff": _PANEL_DIFF_SQL,
-    "panel_moving_avg": _PANEL_MA_SQL,
-    "target_variable": _TARGET_VARIABLE_SQL,
-    "semi_join_active": _SEMI_JOIN_SQL,
-    "anti_join_inactive": _ANTI_JOIN_SQL,
-    "range_join_months": _RANGE_JOIN_SQL,
-    "spread_over_months": _SPREAD_SQL,
-    "key_aggregate": _KEY_AGG_SQL,
-    "clip_values": _CLIP_SQL,
-    "null_counts": _NULL_COUNTS_SQL,
-    "dedup_keep_best": _DEDUP_RANK_SQL,
-    "json_extract": _JSON_SQL,
-    "hash_split": _HASH_SPLIT_SQL,
-    "daily_ffill": _DAILY_FFILL_SQL,
-    "asof_backward": _ASOF_BACKWARD_SQL,
-    "sessionize": _SESSIONIZE_SQL,
-    "interval_union": _INTERVAL_UNION_SQL,
-    "token_stats": _TOKEN_STATS_SQL,
-    "quality_score": _QUALITY_SQL,
-    "language_id": _LANGID_SQL,
-    "exact_dedup": _EXACT_DEDUP_SQL,
-    "fingerprint": _FINGERPRINT_SQL,
-    "minhash_signature": _MINHASH_SQL,
-    "minhash_lsh_pairs": _LSH_PAIRS_SQL,
-    "lsh_star_capped_pairs": _LSH_STAR_SQL,
-    "ngram_jaccard": _JACCARD_SQL,
-    "ngram_jaccard_capped": _JACCARD_CAPPED_SQL,
-    "embedding_topk": _TOPK_SQL,
-    "embedding_topk_sharded": _TOPK_SQL,
+REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]] = {
+    "pricing_summary": (q_pricing_summary, _PRICING_SUMMARY_SQL),
+    "revenue_by_nation": (q_revenue_by_nation, _REVENUE_BY_NATION_SQL),
+    "monthly_panel": (q_monthly_panel, _PANEL_SQL),
+    "panel_lag": (q_panel_lag, _PANEL_LAG_SQL),
+    "panel_diff": (q_panel_diff, _PANEL_DIFF_SQL),
+    "panel_moving_avg": (q_panel_moving_avg, _PANEL_MA_SQL),
+    "target_variable": (q_target_variable, _TARGET_VARIABLE_SQL),
+    "semi_join_active": (q_semi_join_active, _SEMI_JOIN_SQL),
+    "anti_join_inactive": (q_anti_join_inactive, _ANTI_JOIN_SQL),
+    "range_join_months": (q_range_join_months, _RANGE_JOIN_SQL),
+    "spread_over_months": (q_spread_over_months, _SPREAD_SQL),
+    "key_aggregate": (q_key_aggregate, _KEY_AGG_SQL),
+    "clip_values": (q_clip_values, _CLIP_SQL),
+    "null_counts": (q_null_counts, _NULL_COUNTS_SQL),
+    "dedup_keep_best": (q_dedup_keep_best, _DEDUP_RANK_SQL),
+    "json_extract": (q_json_extract, _JSON_SQL),
+    "hash_split": (q_hash_split, _HASH_SPLIT_SQL),
+    "daily_ffill": (q_daily_ffill, _DAILY_FFILL_SQL),
+    "asof_backward": (q_asof_backward, _ASOF_BACKWARD_SQL),
+    "sessionize": (q_sessionize, _SESSIONIZE_SQL),
+    "interval_union": (q_interval_union, _INTERVAL_UNION_SQL),
+    "token_stats": (q_token_stats, _TOKEN_STATS_SQL),
+    "quality_score": (q_quality_score, _QUALITY_SQL),
+    "language_id": (q_language_id, _LANGID_SQL),
+    "exact_dedup": (q_exact_dedup, _EXACT_DEDUP_SQL),
+    "fingerprint": (q_fingerprint, _FINGERPRINT_SQL),
+    "minhash_signature": (q_minhash_signature, _MINHASH_SQL),
+    "minhash_lsh_pairs": (q_minhash_lsh_pairs, _LSH_PAIRS_SQL),
+    "lsh_star_capped_pairs": (q_lsh_star_capped_pairs, _LSH_STAR_SQL),
+    "ngram_jaccard": (q_ngram_jaccard, _JACCARD_SQL),
+    "ngram_jaccard_capped": (q_ngram_jaccard_capped, _JACCARD_CAPPED_SQL),
+    "embedding_topk": (q_embedding_topk, _TOPK_SQL),
+    "embedding_topk_sharded": (q_embedding_topk_sharded, _TOPK_SQL),
 }

@@ -717,39 +717,6 @@ _INCREMENTAL_JOIN_SQL = """
 """
 
 
-QUERIES_ANALYTICS: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "bm25_search": q_bm25_search,
-    "funnel_conversion": q_funnel_conversion,
-    "cohort_retention": q_cohort_retention,
-    "frequent_pairs": q_frequent_pairs,
-    "event_transitions": q_event_transitions,
-    "rfm_segments": q_rfm_segments,
-    "session_paths": q_session_paths,
-    "streaming_transitions": q_streaming_transitions,
-    "holt_forecast": q_holt_forecast,
-    "cusum_alarms": q_cusum_alarms,
-    "streaming_exact_k": q_streaming_exact_k,
-    "equidepth_buckets": q_equidepth_buckets,
-    "incremental_join": q_incremental_join,
-}
-
-ORACLES_ANALYTICS: dict[str, str] = {
-    "bm25_search": _BM25_SQL,
-    "funnel_conversion": _FUNNEL_SQL,
-    "cohort_retention": _COHORT_SQL,
-    "frequent_pairs": _FREQUENT_PAIRS_SQL,
-    "event_transitions": _TRANSITIONS_SQL,
-    "rfm_segments": _RFM_SQL,
-    "session_paths": _SESSION_PATHS_SQL,
-    "streaming_transitions": _TRANSITIONS_SQL,
-    "holt_forecast": _HOLT_SQL,
-    "cusum_alarms": _CUSUM_SQL,
-    "streaming_exact_k": _STREAMING_EXACT_K_SQL,
-    "equidepth_buckets": _EQUIDEPTH_SQL,
-    "incremental_join": _INCREMENTAL_JOIN_SQL,
-}
-
-
 # ---------------------------------------------------------------------------
 # Item-based collaborative filtering: top-3 neighbors per part by
 # squared-cosine over the user co-purchase incidence.  sim² =
@@ -1142,18 +1109,6 @@ _ABC_XYZ_SQL = """
 """
 
 
-QUERIES_ANALYTICS.update({
-    "item_cf_topk": q_item_cf_topk,
-    "apportion_slots": q_apportion_slots,
-    "abc_xyz": q_abc_xyz,
-})
-ORACLES_ANALYTICS.update({
-    "item_cf_topk": _ITEM_CF_SQL,
-    "apportion_slots": _APPORTION_SQL,
-    "abc_xyz": _ABC_XYZ_SQL,
-})
-
-
 # ---------------------------------------------------------------------------
 # OHLC daily bars over the event value stream — open/close by a
 # TOTALLY ordered argmin/argmax (ts, event_id), the same
@@ -1299,16 +1254,6 @@ _GROWTH_CONTRIB_SQL = """
                AS total_growth_ppm
     FROM tot WHERE prev IS NOT NULL
 """
-
-
-QUERIES_ANALYTICS.update({
-    "ohlc_bars": q_ohlc_bars,
-    "growth_contrib": q_growth_contrib,
-})
-ORACLES_ANALYTICS.update({
-    "ohlc_bars": _OHLC_SQL,
-    "growth_contrib": _GROWTH_CONTRIB_SQL,
-})
 
 
 # ---------------------------------------------------------------------------
@@ -1515,16 +1460,6 @@ _DAU_WAU_MAU_SQL = """
 """
 
 
-QUERIES_ANALYTICS.update({
-    "bandit_replay": q_bandit_replay,
-    "dau_wau_mau": q_dau_wau_mau,
-})
-ORACLES_ANALYTICS.update({
-    "bandit_replay": _BANDIT_SQL,
-    "dau_wau_mau": _DAU_WAU_MAU_SQL,
-})
-
-
 # ---------------------------------------------------------------------------
 # Top-decile concentration: share of national revenue from the top 10%
 # of customers (ceil decile by rank), exact ppm — the "whale share"
@@ -1682,16 +1617,6 @@ _AUDIENCE_OVERLAP_SQL = """
            CAST((n_next - n_inter) * 1000000 // n_next AS BIGINT) AS new_ppm
     FROM agg WHERE n_prev > 0 AND n_next > 0
 """
-
-
-QUERIES_ANALYTICS.update({
-    "top_decile_share": q_top_decile_share,
-    "audience_overlap": q_audience_overlap,
-})
-ORACLES_ANALYTICS.update({
-    "top_decile_share": _TOP_DECILE_SQL,
-    "audience_overlap": _AUDIENCE_OVERLAP_SQL,
-})
 
 
 # ---------------------------------------------------------------------------
@@ -1853,16 +1778,6 @@ _KEY_GAPS_SQL = """
 """
 
 
-QUERIES_ANALYTICS.update({
-    "user_accounting": q_user_accounting,
-    "key_gaps": q_key_gaps,
-})
-ORACLES_ANALYTICS.update({
-    "user_accounting": _USER_ACCOUNTING_SQL,
-    "key_gaps": _KEY_GAPS_SQL,
-})
-
-
 # ---------------------------------------------------------------------------
 # Cohort LTV curve: cumulative revenue per acquisition cohort by
 # month-age, normalized per cohort customer — exact milli-cents.
@@ -1930,10 +1845,6 @@ _COHORT_LTV_SQL = """
                 * 1000 // s.cohort_size AS BIGINT) AS ltv_milli
     FROM aged a JOIN sized s USING (m0)
 """
-
-
-QUERIES_ANALYTICS.update({"cohort_ltv": q_cohort_ltv})
-ORACLES_ANALYTICS.update({"cohort_ltv": _COHORT_LTV_SQL})
 
 
 # ---------------------------------------------------------------------------
@@ -2123,16 +2034,6 @@ _BORDA_SQL = """
 """
 
 
-QUERIES_ANALYTICS.update({
-    "sla_trend": q_sla_trend,
-    "borda_scorecard": q_borda_scorecard,
-})
-ORACLES_ANALYTICS.update({
-    "sla_trend": _SLA_TREND_SQL,
-    "borda_scorecard": _BORDA_SQL,
-})
-
-
 # ---------------------------------------------------------------------------
 # Pareto 80/20: the smallest customer head covering >= 80% of revenue,
 # per nation — cumulative cross-multiplication, no float shares.
@@ -2313,11 +2214,38 @@ _REPEAT_PURCHASE_SQL = """
 """
 
 
-QUERIES_ANALYTICS.update({
-    "pareto_8020": q_pareto_8020,
-    "repeat_purchase": q_repeat_purchase,
-})
-ORACLES_ANALYTICS.update({
-    "pareto_8020": _PARETO_8020_SQL,
-    "repeat_purchase": _REPEAT_PURCHASE_SQL,
-})
+# ---------------------------------------------------------------------------
+# Registry
+# ---------------------------------------------------------------------------
+
+REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]] = {
+    "bm25_search": (q_bm25_search, _BM25_SQL),
+    "funnel_conversion": (q_funnel_conversion, _FUNNEL_SQL),
+    "cohort_retention": (q_cohort_retention, _COHORT_SQL),
+    "frequent_pairs": (q_frequent_pairs, _FREQUENT_PAIRS_SQL),
+    "event_transitions": (q_event_transitions, _TRANSITIONS_SQL),
+    "rfm_segments": (q_rfm_segments, _RFM_SQL),
+    "session_paths": (q_session_paths, _SESSION_PATHS_SQL),
+    "streaming_transitions": (q_streaming_transitions, _TRANSITIONS_SQL),
+    "holt_forecast": (q_holt_forecast, _HOLT_SQL),
+    "cusum_alarms": (q_cusum_alarms, _CUSUM_SQL),
+    "streaming_exact_k": (q_streaming_exact_k, _STREAMING_EXACT_K_SQL),
+    "equidepth_buckets": (q_equidepth_buckets, _EQUIDEPTH_SQL),
+    "incremental_join": (q_incremental_join, _INCREMENTAL_JOIN_SQL),
+    "item_cf_topk": (q_item_cf_topk, _ITEM_CF_SQL),
+    "apportion_slots": (q_apportion_slots, _APPORTION_SQL),
+    "abc_xyz": (q_abc_xyz, _ABC_XYZ_SQL),
+    "ohlc_bars": (q_ohlc_bars, _OHLC_SQL),
+    "growth_contrib": (q_growth_contrib, _GROWTH_CONTRIB_SQL),
+    "bandit_replay": (q_bandit_replay, _BANDIT_SQL),
+    "dau_wau_mau": (q_dau_wau_mau, _DAU_WAU_MAU_SQL),
+    "top_decile_share": (q_top_decile_share, _TOP_DECILE_SQL),
+    "audience_overlap": (q_audience_overlap, _AUDIENCE_OVERLAP_SQL),
+    "user_accounting": (q_user_accounting, _USER_ACCOUNTING_SQL),
+    "key_gaps": (q_key_gaps, _KEY_GAPS_SQL),
+    "cohort_ltv": (q_cohort_ltv, _COHORT_LTV_SQL),
+    "sla_trend": (q_sla_trend, _SLA_TREND_SQL),
+    "borda_scorecard": (q_borda_scorecard, _BORDA_SQL),
+    "pareto_8020": (q_pareto_8020, _PARETO_8020_SQL),
+    "repeat_purchase": (q_repeat_purchase, _REPEAT_PURCHASE_SQL),
+}

@@ -1182,66 +1182,6 @@ _RECORDLOG_SQL = """
 """
 
 
-QUERIES_CORPUS: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "chunk_documents": q_chunk_documents,
-    "pack_sequences": q_pack_sequences,
-    "stratified_sample": q_stratified_sample,
-    "contamination_check": q_contamination_check,
-    "redact_pii": q_redact_pii,
-    "repetition_stats": q_repetition_stats,
-    "exact_substring_spans": q_exact_substring_spans,
-    "exact_substring_removal": q_exact_substring_removal,
-    "bloom_prefilter": q_bloom_prefilter,
-    "winnowing_fingerprints": q_winnowing_fingerprints,
-    "winnow_overlap_pairs": q_winnow_overlap_pairs,
-    "incremental_winnow": q_incremental_winnow,
-    "bpe_merges": q_bpe_merges,
-    "lm_perplexity_score": q_lm_perplexity_score,
-    "boilerplate_removal": q_boilerplate_removal,
-    "training_order": q_training_order,
-    "mixture_schedule": q_mixture_schedule,
-    "exact_k_sample": q_exact_k_sample,
-    "weighted_sample": q_weighted_sample,
-    "cluster_safe_split": q_cluster_safe_split,
-    "text_entropy": q_text_entropy,
-    "model_quality_score": q_model_quality_score,
-    "compression_ratio": q_compression_ratio,
-    "quality_gate": q_quality_gate,
-    "streaming_quality_gate": q_streaming_quality_gate,
-    "quality_prune": q_quality_prune,
-    "recordlog_roundtrip": q_recordlog_roundtrip,
-}
-
-ORACLES_CORPUS: dict[str, str] = {
-    "repetition_stats": _REPETITION_SQL,
-    "exact_substring_spans": _SUBSTRING_SPANS_SQL,
-    "exact_substring_removal": _SUBSTRING_REMOVAL_SQL,
-    "bloom_prefilter": _BLOOM_SQL,
-    "winnowing_fingerprints": _WINNOW_FP_SQL,
-    "winnow_overlap_pairs": _WINNOW_PAIRS_SQL,
-    "bpe_merges": _BPE_MERGES_SQL,
-    "lm_perplexity_score": _LM_SCORE_SQL,
-    "incremental_winnow": _INCR_WINNOW_SQL.format(winnow_fp=_WINNOW_FP_SQL),
-    "boilerplate_removal": _BOILERPLATE_SQL,
-    "training_order": _TRAINING_ORDER_SQL,
-    "mixture_schedule": _MIXTURE_SQL,
-    "exact_k_sample": _EXACT_K_SQL,
-    "weighted_sample": _WEIGHTED_SAMPLE_SQL,
-    "cluster_safe_split": _CLUSTER_SPLIT_SQL,
-    "text_entropy": _ENTROPY_SQL,
-    "model_quality_score": _MODEL_SCORE_SQL,
-    "quality_gate": _QUALITY_GATE_SQL,
-    "streaming_quality_gate": _STREAMING_QUALITY_SQL,
-    "quality_prune": _QUALITY_PRUNE_SQL,
-    "recordlog_roundtrip": _RECORDLOG_SQL,
-    "chunk_documents": _CHUNK_SQL,
-    "pack_sequences": _PACK_SQL,
-    "stratified_sample": _STRATIFIED_SQL,
-    "contamination_check": _CONTAMINATION_SQL,
-    "redact_pii": _REDACT_SQL,
-}
-
-
 # ---------------------------------------------------------------------------
 # RAKE keyword extraction (Rose et al. 2010): candidate phrases are
 # maximal stopword/punctuation-free token runs; word score = deg/freq
@@ -1361,10 +1301,6 @@ _RAKE_SQL = r"""
 """.replace("STOPWORDS", "|".join(_RAKE_STOP))
 
 
-QUERIES_CORPUS.update({"rake_keywords": q_rake_keywords})
-ORACLES_CORPUS.update({"rake_keywords": _RAKE_SQL})
-
-
 # ---------------------------------------------------------------------------
 # Greedy max-coverage selection: 3 documents covering the most distinct
 # tokens (diverse-subset data selection, (1-1/e) greedy).  The oracle
@@ -1454,10 +1390,6 @@ _COVERAGE_SELECT_SQL = r"""
         UNION ALL SELECT 3 AS r, doc_id, m FROM w3
     )
 """
-
-
-QUERIES_CORPUS.update({"coverage_select": q_coverage_select})
-ORACLES_CORPUS.update({"coverage_select": _COVERAGE_SELECT_SQL})
 
 
 # ---------------------------------------------------------------------------
@@ -1586,8 +1518,40 @@ _NCD_PAIRS_SQL = r"""
 """
 
 
-QUERIES_CORPUS.update({"ncd_pairs": q_ncd_pairs})
-ORACLES_CORPUS.update({
-    "compression_ratio": _COMPRESSION_RATIO_SQL,
-    "ncd_pairs": _NCD_PAIRS_SQL,
-})
+# ---------------------------------------------------------------------------
+# Registry
+# ---------------------------------------------------------------------------
+
+REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]] = {
+    "chunk_documents": (q_chunk_documents, _CHUNK_SQL),
+    "pack_sequences": (q_pack_sequences, _PACK_SQL),
+    "stratified_sample": (q_stratified_sample, _STRATIFIED_SQL),
+    "contamination_check": (q_contamination_check, _CONTAMINATION_SQL),
+    "redact_pii": (q_redact_pii, _REDACT_SQL),
+    "repetition_stats": (q_repetition_stats, _REPETITION_SQL),
+    "exact_substring_spans": (q_exact_substring_spans, _SUBSTRING_SPANS_SQL),
+    "exact_substring_removal": (q_exact_substring_removal, _SUBSTRING_REMOVAL_SQL),
+    "bloom_prefilter": (q_bloom_prefilter, _BLOOM_SQL),
+    "winnowing_fingerprints": (q_winnowing_fingerprints, _WINNOW_FP_SQL),
+    "winnow_overlap_pairs": (q_winnow_overlap_pairs, _WINNOW_PAIRS_SQL),
+    "incremental_winnow": (q_incremental_winnow,
+                           _INCR_WINNOW_SQL.format(winnow_fp=_WINNOW_FP_SQL)),
+    "bpe_merges": (q_bpe_merges, _BPE_MERGES_SQL),
+    "lm_perplexity_score": (q_lm_perplexity_score, _LM_SCORE_SQL),
+    "boilerplate_removal": (q_boilerplate_removal, _BOILERPLATE_SQL),
+    "training_order": (q_training_order, _TRAINING_ORDER_SQL),
+    "mixture_schedule": (q_mixture_schedule, _MIXTURE_SQL),
+    "exact_k_sample": (q_exact_k_sample, _EXACT_K_SQL),
+    "weighted_sample": (q_weighted_sample, _WEIGHTED_SAMPLE_SQL),
+    "cluster_safe_split": (q_cluster_safe_split, _CLUSTER_SPLIT_SQL),
+    "text_entropy": (q_text_entropy, _ENTROPY_SQL),
+    "model_quality_score": (q_model_quality_score, _MODEL_SCORE_SQL),
+    "compression_ratio": (q_compression_ratio, _COMPRESSION_RATIO_SQL),
+    "quality_gate": (q_quality_gate, _QUALITY_GATE_SQL),
+    "streaming_quality_gate": (q_streaming_quality_gate, _STREAMING_QUALITY_SQL),
+    "quality_prune": (q_quality_prune, _QUALITY_PRUNE_SQL),
+    "recordlog_roundtrip": (q_recordlog_roundtrip, _RECORDLOG_SQL),
+    "rake_keywords": (q_rake_keywords, _RAKE_SQL),
+    "coverage_select": (q_coverage_select, _COVERAGE_SELECT_SQL),
+    "ncd_pairs": (q_ncd_pairs, _NCD_PAIRS_SQL),
+}

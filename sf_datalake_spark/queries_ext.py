@@ -3256,167 +3256,6 @@ _CENTROID_SQL = """
 """
 
 
-# ---------------------------------------------------------------------------
-# Registry
-# ---------------------------------------------------------------------------
-
-QUERIES_EXT: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "set_ops": q_set_ops,
-    "outer_join_activity": q_outer_join_activity,
-    "rollup_revenue": q_rollup_revenue,
-    "pivot_priority": q_pivot_priority,
-    "cumulative_revenue": q_cumulative_revenue,
-    "supplier_stats": q_supplier_stats,
-    "date_arithmetic": q_date_arithmetic,
-    "daily_interpolation": q_daily_interpolation,
-    "simhash": q_simhash,
-    "simhash_pairs": q_simhash_pairs,
-    "multimodal_meta": q_multimodal_meta,
-    "asof_forward": q_asof_forward,
-    "anova_f": q_anova_f,
-    "quantile_summary": q_quantile_summary,
-    "pca_projection": q_pca_projection,
-    "pca_trajectories": q_pca_trajectories,
-    "top_unshipped_orders": q_top_unshipped_orders,
-    "forecast_revenue_change": q_forecast_revenue_change,
-    "asof_nearest": q_asof_nearest,
-    "revenue_deciles": q_revenue_deciles,
-    "string_functions": q_string_functions,
-    "distinct_counts": q_distinct_counts,
-    "table_profile": q_table_profile,
-    "salted_supplier_agg": q_salted_supplier_agg,
-    "streaming_sessions": q_streaming_sessions,
-    "sketches": q_sketches,
-    "multimodal_decode": q_multimodal_decode,
-    "image_phash_near_dups": q_image_phash_near_dups,
-    "ann_lsh_topk": q_ann_lsh_topk,
-    "ann_ivf_topk": q_ann_ivf_topk,
-    "ann_pq_topk": q_ann_pq_topk,
-    "embedding_near_dups": q_embedding_near_dups,
-    "semantic_dedup": q_semantic_dedup,
-    "ml_train_predict": q_ml_train_predict,
-    "linear_shap_parity": q_linear_shap_parity,
-    "resampled_counts": q_resampled_counts,
-    "grouped_split_counts": q_grouped_split_counts,
-    "tree_contributions": q_tree_contributions,
-    "tree_shap_parity": q_tree_shap_parity,
-    "write_roundtrip": q_write_roundtrip,
-    "file_skipping": q_file_skipping,
-    "semi_range_join": q_semi_range_join,
-    "filter_battery": q_filter_battery,
-    "imputer_mean": q_imputer_mean,
-    "salted_join_check": q_salted_join,
-    "confusion_matrix": q_confusion_matrix,
-    "alert_levels": q_alert_levels,
-    "prediction_writer": q_prediction_writer,
-    "extract_job": q_extract_job,
-    "bucketed_join": q_bucketed_join,
-    "dedup_clusters": q_dedup_clusters,
-    "dedup_resolution": q_dedup_resolution,
-    "triangle_stats": q_triangle_stats,
-    "incremental_dedup": q_incremental_dedup,
-    "psi_drift": q_psi_drift,
-    "calibration_curve": q_calibration_curve,
-    "tfidf_topk": q_tfidf_topk,
-    "streaming_windowed": q_streaming_windowed,
-    "streaming_dedup": q_streaming_dedup,
-    "streaming_near_dup_gate": q_streaming_near_dup_gate,
-    "centroid_assignment": q_centroid_assignment,
-    "streaming_bloom_gate": q_streaming_bloom_gate,
-    "streaming_upsert": q_streaming_upsert,
-    "stream_static_join": q_stream_static_join,
-    "stream_stream_join": q_stream_stream_join,
-    "variant_extract": q_variant_extract,
-    "rolling_7day": q_rolling_7day,
-    "threshold_histogram": q_threshold_histogram,
-}
-
-ORACLES_EXT: dict[str, str] = {
-    "resampled_counts": _RESAMPLED_COUNTS_SQL,
-    "grouped_split_counts": _GROUPED_SPLIT_SQL,
-    "set_ops": _SET_OPS_SQL,
-    "outer_join_activity": _OUTER_JOIN_SQL,
-    "rollup_revenue": _ROLLUP_SQL,
-    "pivot_priority": _PIVOT_SQL,
-    "cumulative_revenue": _CUMULATIVE_SQL,
-    "supplier_stats": _SUPPLIER_STATS_SQL,
-    "date_arithmetic": _DATE_ARITH_SQL,
-    "daily_interpolation": _INTERPOLATION_SQL,
-    "simhash": _SIMHASH_SQL,
-    "simhash_pairs": _SIMHASH_PAIRS_SQL,
-    "multimodal_meta": _MULTIMODAL_META_SQL,
-    "asof_forward": _ASOF_FORWARD_SQL,
-    "anova_f": _ANOVA_SQL,
-    "quantile_summary": _QUANTILE_SQL,
-    "top_unshipped_orders": _TOP_UNSHIPPED_SQL,
-    "forecast_revenue_change": _FORECAST_SQL,
-    "asof_nearest": _ASOF_NEAREST_SQL,
-    "revenue_deciles": _DECILES_SQL,
-    "string_functions": _STRING_SQL,
-    "distinct_counts": _DISTINCT_SQL,
-    "table_profile": _TABLE_PROFILE_SQL,
-    "salted_supplier_agg": _SALTED_AGG_SQL,
-    "streaming_sessions": _STREAMING_SESSIONS_SQL,
-    "write_roundtrip": _WRITE_ROUNDTRIP_SQL,
-    "file_skipping": _FILE_SKIPPING_SQL,
-    "semi_range_join": _SEMI_RANGE_SQL,
-    "filter_battery": _FILTER_BATTERY_SQL,
-    "imputer_mean": _IMPUTER_MEAN_SQL,
-    "salted_join_check": _SALTED_JOIN_SQL,
-    "confusion_matrix": _CONFUSION_SQL,
-    "alert_levels": _ALERT_LEVELS_SQL,
-    "prediction_writer": _PREDICTION_WRITER_SQL,
-    "extract_job": _EXTRACT_JOB_SQL,
-    "bucketed_join": _BUCKETED_JOIN_SQL,
-    "dedup_clusters": _DEDUP_CLUSTERS_SQL,
-    "dedup_resolution": _DEDUP_RESOLUTION_SQL,
-    "triangle_stats": _TRIANGLE_SQL,
-    "incremental_dedup": _INCREMENTAL_DEDUP_SQL,
-    "psi_drift": _PSI_SQL,
-    "tfidf_topk": _TFIDF_SQL,
-    "streaming_windowed": _STREAMING_WINDOWED_SQL,
-    "streaming_dedup": _STREAMING_DEDUP_SQL,
-    "streaming_near_dup_gate": _STREAMING_GATE_SQL,
-    "centroid_assignment": _CENTROID_SQL,
-    "streaming_bloom_gate": _STREAMING_BLOOM_GATE_SQL,
-    "streaming_upsert": _STREAMING_UPSERT_SQL,
-    "stream_static_join": _STREAM_STATIC_JOIN_SQL,
-    "stream_stream_join": _STREAM_STREAM_JOIN_SQL,
-    "variant_extract": _VARIANT_SQL,
-    "rolling_7day": _ROLLING_7DAY_SQL,
-    "threshold_histogram": _THRESHOLD_HISTOGRAM_SQL,
-    # ann_ivf_topk: converted round 6 to an oracled recall CONTRACT
-    # (exact twin computed in-query; oracle replays the invariant as
-    # constants — see q_ann_ivf_topk's docstring); ann_lsh_topk /
-    # ann_pq_topk followed in round 7 with the same pattern (LSH's
-    # contract checks candidate selectivity + numeric agreement + a
-    # breakage floor — see its docstring for why top-3 recall is the
-    # wrong guarantee for bucketed search on a uniform corpus).
-    "ann_ivf_topk": _ANN_IVF_SQL,
-    "ann_lsh_topk": _ANN_LSH_SQL,
-    "ann_pq_topk": _ANN_PQ_SQL,
-    # embedding_near_dups / semantic_dedup: converted round 9 to the
-    # exact µ-quantized pair set (bit-identical cross-engine integers;
-    # see q_embedding_near_dups) — the LSH/KMeans blocked operators
-    # remain the scale paths, covered by contracts and unit tests.
-    "embedding_near_dups": _NEAR_DUP_PAIRS_SQL,
-    "semantic_dedup": _SEMANTIC_DEDUP_SQL,
-    # pca_projection: converted round 9 to the fixed-point power
-    # iteration (pca_top2_ppm) — recursive-CTE-replayable.
-    "pca_projection": _pca_projection_sql(),
-    # calibration_curve: converted round 9 — the scored model is the
-    # deterministic fixed-point logistic (single-group
-    # irls_logistic_groups_ppm) and the bucket stats are exact-integer
-    # sums, so the full pipeline replays in SQL.
-    "calibration_curve": _calibration_curve_sql(),
-    # pca_trajectories: converted round 9 — fixed basis from the
-    # first-period slice via the same fixed-point power iteration.
-    "pca_trajectories": _pca_trajectories_sql(),
-    # Rows-only by design (no SQL-expressible oracle): sketches,
-    # multimodal_decode, ml_train_predict, tree_contributions.
-}
-
-
 def q_streaming_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming daily OHLC bars per event type — open/close via
     MIN/MAX over a (ts, event_id, cents) struct (lexicographic struct
@@ -3470,10 +3309,6 @@ _STREAMING_OHLC_SQL = """
            CAST(count(*) AS BIGINT) AS n_ticks
     FROM ev GROUP BY 1, 2
 """
-
-
-QUERIES_EXT.update({"streaming_ohlc": q_streaming_ohlc})
-ORACLES_EXT.update({"streaming_ohlc": _STREAMING_OHLC_SQL})
 
 
 def q_native_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3581,11 +3416,106 @@ _FEDERATED_SQL = """
 """
 
 
-QUERIES_EXT.update({
-    "native_session_window": q_native_session_window,
-    "federated_join": q_federated_join,
-})
-ORACLES_EXT.update({
-    "native_session_window": _NATIVE_SESSION_SQL,
-    "federated_join": _FEDERATED_SQL,
-})
+# ---------------------------------------------------------------------------
+# Registry
+# ---------------------------------------------------------------------------
+
+REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]] = {
+    "set_ops": (q_set_ops, _SET_OPS_SQL),
+    "outer_join_activity": (q_outer_join_activity, _OUTER_JOIN_SQL),
+    "rollup_revenue": (q_rollup_revenue, _ROLLUP_SQL),
+    "pivot_priority": (q_pivot_priority, _PIVOT_SQL),
+    "cumulative_revenue": (q_cumulative_revenue, _CUMULATIVE_SQL),
+    "supplier_stats": (q_supplier_stats, _SUPPLIER_STATS_SQL),
+    "date_arithmetic": (q_date_arithmetic, _DATE_ARITH_SQL),
+    "daily_interpolation": (q_daily_interpolation, _INTERPOLATION_SQL),
+    "simhash": (q_simhash, _SIMHASH_SQL),
+    "simhash_pairs": (q_simhash_pairs, _SIMHASH_PAIRS_SQL),
+    "multimodal_meta": (q_multimodal_meta, _MULTIMODAL_META_SQL),
+    "asof_forward": (q_asof_forward, _ASOF_FORWARD_SQL),
+    "anova_f": (q_anova_f, _ANOVA_SQL),
+    "quantile_summary": (q_quantile_summary, _QUANTILE_SQL),
+    # pca_projection: converted round 9 to the fixed-point power
+    # iteration (pca_top2_ppm) — recursive-CTE-replayable.
+    "pca_projection": (q_pca_projection, _pca_projection_sql()),
+    # pca_trajectories: converted round 9 — fixed basis from the
+    # first-period slice via the same fixed-point power iteration.
+    "pca_trajectories": (q_pca_trajectories, _pca_trajectories_sql()),
+    "top_unshipped_orders": (q_top_unshipped_orders, _TOP_UNSHIPPED_SQL),
+    "forecast_revenue_change": (q_forecast_revenue_change, _FORECAST_SQL),
+    "asof_nearest": (q_asof_nearest, _ASOF_NEAREST_SQL),
+    "revenue_deciles": (q_revenue_deciles, _DECILES_SQL),
+    "string_functions": (q_string_functions, _STRING_SQL),
+    "distinct_counts": (q_distinct_counts, _DISTINCT_SQL),
+    "table_profile": (q_table_profile, _TABLE_PROFILE_SQL),
+    "salted_supplier_agg": (q_salted_supplier_agg, _SALTED_AGG_SQL),
+    "streaming_sessions": (q_streaming_sessions, _STREAMING_SESSIONS_SQL),
+    # rows-only: sketch internals are engine-specific
+    "sketches": (q_sketches, None),
+    # rows-only: md5-seeded fake pixels are not SQL-reproducible
+    "multimodal_decode": (q_multimodal_decode, None),
+    # rows-only: pHash of md5-seeded fake pixels is not SQL-reproducible
+    "image_phash_near_dups": (q_image_phash_near_dups, None),
+    # ann_ivf_topk: converted round 6 to an oracled recall CONTRACT
+    # (exact twin computed in-query; oracle replays the invariant as
+    # constants — see q_ann_ivf_topk's docstring); ann_lsh_topk /
+    # ann_pq_topk followed in round 7 with the same pattern (LSH's
+    # contract checks candidate selectivity + numeric agreement + a
+    # breakage floor — see its docstring for why top-3 recall is the
+    # wrong guarantee for bucketed search on a uniform corpus).
+    "ann_lsh_topk": (q_ann_lsh_topk, _ANN_LSH_SQL),
+    "ann_ivf_topk": (q_ann_ivf_topk, _ANN_IVF_SQL),
+    "ann_pq_topk": (q_ann_pq_topk, _ANN_PQ_SQL),
+    # embedding_near_dups / semantic_dedup: converted round 9 to the
+    # exact µ-quantized pair set (bit-identical cross-engine integers;
+    # see q_embedding_near_dups) — the LSH/KMeans blocked operators
+    # remain the scale paths, covered by contracts and unit tests.
+    "embedding_near_dups": (q_embedding_near_dups, _NEAR_DUP_PAIRS_SQL),
+    "semantic_dedup": (q_semantic_dedup, _SEMANTIC_DEDUP_SQL),
+    # rows-only: MLlib training state is engine-native
+    "ml_train_predict": (q_ml_train_predict, None),
+    # rows-only: covariance/SHAP matrices are not oracle-expressible
+    "linear_shap_parity": (q_linear_shap_parity, None),
+    "resampled_counts": (q_resampled_counts, _RESAMPLED_COUNTS_SQL),
+    "grouped_split_counts": (q_grouped_split_counts, _GROUPED_SPLIT_SQL),
+    # rows-only: tree training is not SQL-expressible
+    "tree_contributions": (q_tree_contributions, None),
+    # rows-only: tree training + the TreeSHAP recursion are not SQL-expressible
+    "tree_shap_parity": (q_tree_shap_parity, None),
+    "write_roundtrip": (q_write_roundtrip, _WRITE_ROUNDTRIP_SQL),
+    "file_skipping": (q_file_skipping, _FILE_SKIPPING_SQL),
+    "semi_range_join": (q_semi_range_join, _SEMI_RANGE_SQL),
+    "filter_battery": (q_filter_battery, _FILTER_BATTERY_SQL),
+    "imputer_mean": (q_imputer_mean, _IMPUTER_MEAN_SQL),
+    "salted_join_check": (q_salted_join, _SALTED_JOIN_SQL),
+    "confusion_matrix": (q_confusion_matrix, _CONFUSION_SQL),
+    "alert_levels": (q_alert_levels, _ALERT_LEVELS_SQL),
+    "prediction_writer": (q_prediction_writer, _PREDICTION_WRITER_SQL),
+    "extract_job": (q_extract_job, _EXTRACT_JOB_SQL),
+    "bucketed_join": (q_bucketed_join, _BUCKETED_JOIN_SQL),
+    "dedup_clusters": (q_dedup_clusters, _DEDUP_CLUSTERS_SQL),
+    "dedup_resolution": (q_dedup_resolution, _DEDUP_RESOLUTION_SQL),
+    "triangle_stats": (q_triangle_stats, _TRIANGLE_SQL),
+    "incremental_dedup": (q_incremental_dedup, _INCREMENTAL_DEDUP_SQL),
+    "psi_drift": (q_psi_drift, _PSI_SQL),
+    # calibration_curve: converted round 9 — the scored model is the
+    # deterministic fixed-point logistic (single-group
+    # irls_logistic_groups_ppm) and the bucket stats are exact-integer
+    # sums, so the full pipeline replays in SQL.
+    "calibration_curve": (q_calibration_curve, _calibration_curve_sql()),
+    "tfidf_topk": (q_tfidf_topk, _TFIDF_SQL),
+    "streaming_windowed": (q_streaming_windowed, _STREAMING_WINDOWED_SQL),
+    "streaming_dedup": (q_streaming_dedup, _STREAMING_DEDUP_SQL),
+    "streaming_near_dup_gate": (q_streaming_near_dup_gate, _STREAMING_GATE_SQL),
+    "centroid_assignment": (q_centroid_assignment, _CENTROID_SQL),
+    "streaming_bloom_gate": (q_streaming_bloom_gate, _STREAMING_BLOOM_GATE_SQL),
+    "streaming_upsert": (q_streaming_upsert, _STREAMING_UPSERT_SQL),
+    "stream_static_join": (q_stream_static_join, _STREAM_STATIC_JOIN_SQL),
+    "stream_stream_join": (q_stream_stream_join, _STREAM_STREAM_JOIN_SQL),
+    "variant_extract": (q_variant_extract, _VARIANT_SQL),
+    "rolling_7day": (q_rolling_7day, _ROLLING_7DAY_SQL),
+    "threshold_histogram": (q_threshold_histogram, _THRESHOLD_HISTOGRAM_SQL),
+    "streaming_ohlc": (q_streaming_ohlc, _STREAMING_OHLC_SQL),
+    "native_session_window": (q_native_session_window, _NATIVE_SESSION_SQL),
+    "federated_join": (q_federated_join, _FEDERATED_SQL),
+}

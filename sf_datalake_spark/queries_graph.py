@@ -439,23 +439,6 @@ _LINKAGE_SQL = f"""
 """
 
 
-QUERIES_GRAPH: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "bfs_khop": q_bfs_khop,
-    "label_propagation": q_label_propagation,
-    "geo_distance_join": q_geo_distance_join,
-    "twap_value": q_twap_value,
-    "record_linkage": q_record_linkage,
-}
-
-ORACLES_GRAPH: dict[str, str] = {
-    "bfs_khop": _BFS_SQL,
-    "label_propagation": _LPA_SQL,
-    "geo_distance_join": _GEO_SQL,
-    "twap_value": _TWAP_SQL,
-    "record_linkage": _LINKAGE_SQL,
-}
-
-
 # ---------------------------------------------------------------------------
 # Weighted shortest paths: 3-round Bellman-Ford over the co-purchase
 # graph with integer affinity distances (1000 div co-count)
@@ -519,5 +502,15 @@ _WEIGHTED_PATHS_SQL = f"""
 """
 
 
-QUERIES_GRAPH.update({"weighted_paths": q_weighted_paths})
-ORACLES_GRAPH.update({"weighted_paths": _WEIGHTED_PATHS_SQL})
+# ---------------------------------------------------------------------------
+# Registry
+# ---------------------------------------------------------------------------
+
+REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]] = {
+    "bfs_khop": (q_bfs_khop, _BFS_SQL),
+    "label_propagation": (q_label_propagation, _LPA_SQL),
+    "geo_distance_join": (q_geo_distance_join, _GEO_SQL),
+    "twap_value": (q_twap_value, _TWAP_SQL),
+    "record_linkage": (q_record_linkage, _LINKAGE_SQL),
+    "weighted_paths": (q_weighted_paths, _WEIGHTED_PATHS_SQL),
+}

@@ -2126,70 +2126,40 @@ _KM_SQL = """
 """
 
 
-QUERIES_MINING: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "ssjoin_exact": q_ssjoin_exact,
-    "scd2_dimension": q_scd2_dimension,
-    "pareto_parts": q_pareto_parts,
-    "pareto_parts_3d": q_pareto_parts_3d,
-    "acf_revenue": q_acf_revenue,
-    "benford_profile": q_benford_profile,
-    "mad_outlier_days": q_mad_outlier_days,
-    "scd2_pit_join": q_scd2_pit_join,
-    "streaming_scd2": q_streaming_scd2,
-    "k_core_parts": q_k_core_parts,
-    "table_diff": q_table_diff,
-    "fk_violations": q_fk_violations,
-    "ks_drift": q_ks_drift,
-    "isotonic_trend": q_isotonic_trend,
-    "phrase_search": q_phrase_search,
-    "linear_attribution": q_linear_attribution,
-    "streaming_skyline": q_streaming_skyline,
-    "ann_int8_topk": q_ann_int8_topk,
-    "cross_source_overlap": q_cross_source_overlap,
-    "robust_trend": q_robust_trend,
-    "skew_report": q_skew_report,
-    "join_size_estimate": q_join_size_estimate,
-    "core_decomposition": q_core_decomposition,
-    "association_metrics": q_association_metrics,
-    "ab_test": q_ab_test,
-    "position_attribution": q_position_attribution,
-    "capped_balance": q_capped_balance,
-    "tv_distance": q_tv_distance,
-    "concentration_metrics": q_concentration_metrics,
-    "seasonality_index": q_seasonality_index,
-    "km_survival": q_km_survival,
-}
+# ---------------------------------------------------------------------------
+# Registry
+# ---------------------------------------------------------------------------
 
-ORACLES_MINING: dict[str, str] = {
-    "ssjoin_exact": _SSJOIN_SQL,
-    "scd2_dimension": _SCD2_SQL,
-    "pareto_parts": _PARETO_SQL,
-    "pareto_parts_3d": _PARETO_3D_SQL,
-    "acf_revenue": _ACF_SQL,
-    "benford_profile": _BENFORD_SQL,
-    "mad_outlier_days": _MAD_SQL,
-    "scd2_pit_join": _SCD2_PIT_SQL,
-    "streaming_scd2": _SCD2_SQL,
-    "k_core_parts": _K_CORE_SQL,
-    "table_diff": _TABLE_DIFF_SQL,
-    "fk_violations": _FK_SQL,
-    "ks_drift": _KS_SQL,
-    "isotonic_trend": _ISOTONIC_SQL,
-    "phrase_search": _PHRASE_SQL,
-    "linear_attribution": _ATTRIBUTION_SQL,
-    "streaming_skyline": _PARETO_SQL,
-    "ann_int8_topk": _ANN_INT8_SQL,
-    "cross_source_overlap": _CROSS_SOURCE_SQL,
-    "robust_trend": _ROBUST_TREND_SQL,
-    "skew_report": _SKEW_REPORT_SQL,
-    "join_size_estimate": _JOIN_SIZE_SQL,
-    "core_decomposition": _CORE_SQL,
-    "association_metrics": _ASSOCIATION_SQL,
-    "ab_test": _AB_TEST_SQL,
-    "position_attribution": _POSITION_ATTRIBUTION_SQL,
-    "capped_balance": _CAPPED_BALANCE_SQL,
-    "tv_distance": _TV_SQL,
-    "concentration_metrics": _CONCENTRATION_SQL,
-    "seasonality_index": _SEASONALITY_SQL,
-    "km_survival": _KM_SQL,
+REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]] = {
+    "ssjoin_exact": (q_ssjoin_exact, _SSJOIN_SQL),
+    "scd2_dimension": (q_scd2_dimension, _SCD2_SQL),
+    "pareto_parts": (q_pareto_parts, _PARETO_SQL),
+    "pareto_parts_3d": (q_pareto_parts_3d, _PARETO_3D_SQL),
+    "acf_revenue": (q_acf_revenue, _ACF_SQL),
+    "benford_profile": (q_benford_profile, _BENFORD_SQL),
+    "mad_outlier_days": (q_mad_outlier_days, _MAD_SQL),
+    "scd2_pit_join": (q_scd2_pit_join, _SCD2_PIT_SQL),
+    "streaming_scd2": (q_streaming_scd2, _SCD2_SQL),
+    "k_core_parts": (q_k_core_parts, _K_CORE_SQL),
+    "table_diff": (q_table_diff, _TABLE_DIFF_SQL),
+    "fk_violations": (q_fk_violations, _FK_SQL),
+    "ks_drift": (q_ks_drift, _KS_SQL),
+    "isotonic_trend": (q_isotonic_trend, _ISOTONIC_SQL),
+    "phrase_search": (q_phrase_search, _PHRASE_SQL),
+    "linear_attribution": (q_linear_attribution, _ATTRIBUTION_SQL),
+    "streaming_skyline": (q_streaming_skyline, _PARETO_SQL),
+    "ann_int8_topk": (q_ann_int8_topk, _ANN_INT8_SQL),
+    "cross_source_overlap": (q_cross_source_overlap, _CROSS_SOURCE_SQL),
+    "robust_trend": (q_robust_trend, _ROBUST_TREND_SQL),
+    "skew_report": (q_skew_report, _SKEW_REPORT_SQL),
+    "join_size_estimate": (q_join_size_estimate, _JOIN_SIZE_SQL),
+    "core_decomposition": (q_core_decomposition, _CORE_SQL),
+    "association_metrics": (q_association_metrics, _ASSOCIATION_SQL),
+    "ab_test": (q_ab_test, _AB_TEST_SQL),
+    "position_attribution": (q_position_attribution, _POSITION_ATTRIBUTION_SQL),
+    "capped_balance": (q_capped_balance, _CAPPED_BALANCE_SQL),
+    "tv_distance": (q_tv_distance, _TV_SQL),
+    "concentration_metrics": (q_concentration_metrics, _CONCENTRATION_SQL),
+    "seasonality_index": (q_seasonality_index, _SEASONALITY_SQL),
+    "km_survival": (q_km_survival, _KM_SQL),
 }

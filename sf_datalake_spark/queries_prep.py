@@ -222,23 +222,6 @@ _DP_SQL = """
 """
 
 
-QUERIES_PREP: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "feature_hash_score": q_feature_hash_score,
-    "quantile_normalize": q_quantile_normalize,
-    "sliding_distinct": q_sliding_distinct,
-    "k_anonymity": q_k_anonymity,
-    "dp_noisy_counts": q_dp_noisy_counts,
-}
-
-ORACLES_PREP: dict[str, str] = {
-    "feature_hash_score": _FEATURE_HASH_SQL,
-    "quantile_normalize": _QUANTILE_NORMALIZE_SQL,
-    "sliding_distinct": _SLIDING_DISTINCT_SQL,
-    "k_anonymity": _KANON_SQL,
-    "dp_noisy_counts": _DP_SQL,
-}
-
-
 # ---------------------------------------------------------------------------
 # Exact integer Gram matrix of the embedding corpus
 # ---------------------------------------------------------------------------
@@ -270,10 +253,6 @@ _EMBEDDING_GRAM_SQL = """
     WHERE j.j >= i.i
     GROUP BY 1, 2
 """
-
-
-QUERIES_PREP.update({"embedding_gram": q_embedding_gram})
-ORACLES_PREP.update({"embedding_gram": _EMBEDDING_GRAM_SQL})
 
 
 # ---------------------------------------------------------------------------
@@ -329,10 +308,6 @@ _GDC_SQL = f"""
            CAST(COALESCE(c.cluster, -1) AS BIGINT) AS cluster
     FROM pts p LEFT JOIN comp c USING (cell_key)
 """
-
-
-QUERIES_PREP.update({"grid_density_clusters": q_grid_density_clusters})
-ORACLES_PREP.update({"grid_density_clusters": _GDC_SQL})
 
 
 # ---------------------------------------------------------------------------
@@ -402,10 +377,6 @@ _CONFORMAL_SQL = """
     WHERE t.b >= 8000
     GROUP BY 1, 2, 3, 5, 6
 """
-
-
-QUERIES_PREP.update({"conformal_interval": q_conformal_interval})
-ORACLES_PREP.update({"conformal_interval": _CONFORMAL_SQL})
 
 
 # ---------------------------------------------------------------------------
@@ -660,13 +631,20 @@ _TARGET_ENCODING_SQL = """
 """
 
 
-QUERIES_PREP.update({
-    "best_split": q_best_split,
-    "woe_iv": q_woe_iv,
-    "target_encoding": q_target_encoding,
-})
-ORACLES_PREP.update({
-    "best_split": _BEST_SPLIT_SQL,
-    "woe_iv": _WOE_IV_SQL,
-    "target_encoding": _TARGET_ENCODING_SQL,
-})
+# ---------------------------------------------------------------------------
+# Registry
+# ---------------------------------------------------------------------------
+
+REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]] = {
+    "feature_hash_score": (q_feature_hash_score, _FEATURE_HASH_SQL),
+    "quantile_normalize": (q_quantile_normalize, _QUANTILE_NORMALIZE_SQL),
+    "sliding_distinct": (q_sliding_distinct, _SLIDING_DISTINCT_SQL),
+    "k_anonymity": (q_k_anonymity, _KANON_SQL),
+    "dp_noisy_counts": (q_dp_noisy_counts, _DP_SQL),
+    "embedding_gram": (q_embedding_gram, _EMBEDDING_GRAM_SQL),
+    "grid_density_clusters": (q_grid_density_clusters, _GDC_SQL),
+    "conformal_interval": (q_conformal_interval, _CONFORMAL_SQL),
+    "best_split": (q_best_split, _BEST_SPLIT_SQL),
+    "woe_iv": (q_woe_iv, _WOE_IV_SQL),
+    "target_encoding": (q_target_encoding, _TARGET_ENCODING_SQL),
+}

@@ -1174,72 +1174,6 @@ _FUZZY_MATCH_SQL = """
 
 
 # ---------------------------------------------------------------------------
-# Registry
-# ---------------------------------------------------------------------------
-
-QUERIES_REL: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "min_cost_supplier": q_min_cost_supplier,
-    "lateral_topk": q_lateral_topk,
-    "grouping_sets": q_grouping_sets,
-    "null_safe_join": q_null_safe_join,
-    "bpe_tokens": q_bpe_tokens,
-    "late_shipment_priority": q_late_shipment_priority,
-    "customer_order_distribution": q_customer_order_distribution,
-    "brand_supplier_counts": q_brand_supplier_counts,
-    "small_quantity_revenue": q_small_quantity_revenue,
-    "ewma_revenue": q_ewma_revenue,
-    "constraint_check": q_constraint_check,
-    "cube_revenue": q_cube_revenue,
-    "window_battery": q_window_battery,
-    "array_functions": q_array_functions,
-    "explode_positions": q_explode_positions,
-    "edit_distance": q_edit_distance,
-    "merge_upsert": q_merge_upsert,
-    "scd2_track": q_scd2_track,
-    "zorder_key": q_zorder_key,
-    "correlation_matrix": q_correlation_matrix,
-    "pagerank_docs": q_pagerank_docs,
-    "recursive_hierarchy": q_recursive_hierarchy,
-    "trend_slopes": q_trend_slopes,
-    "robust_stats": q_robust_stats,
-    "agg_function_battery": q_agg_function_battery,
-    "unpivot_metrics": q_unpivot_metrics,
-    "map_functions": q_map_functions,
-    "fuzzy_name_match": q_fuzzy_name_match,
-}
-
-ORACLES_REL: dict[str, str] = {
-    "min_cost_supplier": _MIN_COST_SQL,
-    "lateral_topk": _LATERAL_SQL,
-    "grouping_sets": _GROUPING_SETS_SQL,
-    "null_safe_join": _NULL_SAFE_SQL,
-    "bpe_tokens": _BPE_TOKENS_SQL,
-    "late_shipment_priority": _LATE_SHIPMENT_SQL,
-    "customer_order_distribution": _ORDER_DISTRIBUTION_SQL,
-    "brand_supplier_counts": _BRAND_SUPPLIER_SQL,
-    "small_quantity_revenue": _SMALL_QTY_SQL,
-    "ewma_revenue": _EWMA_SQL,
-    "constraint_check": _CONSTRAINT_SQL,
-    "cube_revenue": _CUBE_SQL,
-    "window_battery": _WINDOW_BATTERY_SQL,
-    "array_functions": _ARRAY_SQL,
-    "explode_positions": _EXPLODE_POSITIONS_SQL,
-    "edit_distance": _EDIT_DISTANCE_SQL,
-    "merge_upsert": _MERGE_UPSERT_SQL,
-    "scd2_track": _SCD2_SQL,
-    "zorder_key": _ZORDER_SQL,
-    "correlation_matrix": _CORRELATION_SQL,
-    "recursive_hierarchy": _RECURSIVE_SQL,
-    "trend_slopes": _TREND_SQL,
-    "robust_stats": _ROBUST_SQL,
-    "agg_function_battery": _AGG_BATTERY_SQL,
-    "unpivot_metrics": _UNPIVOT_SQL,
-    "map_functions": _MAP_FUNCTIONS_SQL,
-    "fuzzy_name_match": _FUZZY_MATCH_SQL,
-}
-
-
-# ---------------------------------------------------------------------------
 # Spark 4 SQL pipe syntax: the same logical plan Catalyst sees from
 # the chained-DataFrame form, written as |> stages — registered to
 # prove the engine's SQL surface covers the new composition syntax
@@ -1284,10 +1218,6 @@ _PIPE_SYNTAX_SQL = """
     ORDER BY revenue_cents DESC, o_orderpriority ASC, month ASC
     LIMIT 25
 """
-
-
-QUERIES_REL.update({"pipe_syntax_report": q_pipe_syntax_report})
-ORACLES_REL.update({"pipe_syntax_report": _PIPE_SYNTAX_SQL})
 
 
 # ---------------------------------------------------------------------------
@@ -1340,10 +1270,6 @@ _MV_REWRITE_SQL = """
 """
 
 
-QUERIES_REL.update({"mv_rewrite": q_mv_rewrite})
-ORACLES_REL.update({"mv_rewrite": _MV_REWRITE_SQL})
-
-
 # ---------------------------------------------------------------------------
 # Python UDTF surface demo (Spark 4): a lateral table function that
 # splits an amount into equal parts with largest-remainder pennies.
@@ -1387,10 +1313,6 @@ _UDTF_DEMO_SQL = """
                        THEN 1 ELSE 0 END AS BIGINT) AS amount_cents
     FROM nation, (SELECT unnest(range(1, 5)) AS part) p
 """
-
-
-QUERIES_REL.update({"udtf_demo": q_udtf_demo})
-ORACLES_REL.update({"udtf_demo": _UDTF_DEMO_SQL})
 
 
 # ---------------------------------------------------------------------------
@@ -1463,10 +1385,6 @@ _QUANTILE_ACCURACY_SQL = """
 """
 
 
-QUERIES_REL.update({"quantile_accuracy": q_quantile_accuracy})
-ORACLES_REL.update({"quantile_accuracy": _QUANTILE_ACCURACY_SQL})
-
-
 # ---------------------------------------------------------------------------
 # Exact global rank at scale: the two-pass range-partitioned
 # row-number (operators/windows.global_rank_two_pass) vs the oracle's
@@ -1500,10 +1418,6 @@ _DISTRIBUTED_RANK_SQL = """
                         o_orderkey) AS BIGINT) AS global_rank
     FROM orders
 """
-
-
-QUERIES_REL.update({"distributed_rank": q_distributed_rank})
-ORACLES_REL.update({"distributed_rank": _DISTRIBUTED_RANK_SQL})
 
 
 def _pagerank_sql() -> str:
@@ -1561,4 +1475,43 @@ def _pagerank_sql() -> str:
 """
 
 
-ORACLES_REL.update({"pagerank_docs": _pagerank_sql()})
+# ---------------------------------------------------------------------------
+# Registry
+# ---------------------------------------------------------------------------
+
+REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]] = {
+    "min_cost_supplier": (q_min_cost_supplier, _MIN_COST_SQL),
+    "lateral_topk": (q_lateral_topk, _LATERAL_SQL),
+    "grouping_sets": (q_grouping_sets, _GROUPING_SETS_SQL),
+    "null_safe_join": (q_null_safe_join, _NULL_SAFE_SQL),
+    "bpe_tokens": (q_bpe_tokens, _BPE_TOKENS_SQL),
+    "late_shipment_priority": (q_late_shipment_priority, _LATE_SHIPMENT_SQL),
+    "customer_order_distribution": (q_customer_order_distribution,
+                                    _ORDER_DISTRIBUTION_SQL),
+    "brand_supplier_counts": (q_brand_supplier_counts, _BRAND_SUPPLIER_SQL),
+    "small_quantity_revenue": (q_small_quantity_revenue, _SMALL_QTY_SQL),
+    "ewma_revenue": (q_ewma_revenue, _EWMA_SQL),
+    "constraint_check": (q_constraint_check, _CONSTRAINT_SQL),
+    "cube_revenue": (q_cube_revenue, _CUBE_SQL),
+    "window_battery": (q_window_battery, _WINDOW_BATTERY_SQL),
+    "array_functions": (q_array_functions, _ARRAY_SQL),
+    "explode_positions": (q_explode_positions, _EXPLODE_POSITIONS_SQL),
+    "edit_distance": (q_edit_distance, _EDIT_DISTANCE_SQL),
+    "merge_upsert": (q_merge_upsert, _MERGE_UPSERT_SQL),
+    "scd2_track": (q_scd2_track, _SCD2_SQL),
+    "zorder_key": (q_zorder_key, _ZORDER_SQL),
+    "correlation_matrix": (q_correlation_matrix, _CORRELATION_SQL),
+    "pagerank_docs": (q_pagerank_docs, _pagerank_sql()),
+    "recursive_hierarchy": (q_recursive_hierarchy, _RECURSIVE_SQL),
+    "trend_slopes": (q_trend_slopes, _TREND_SQL),
+    "robust_stats": (q_robust_stats, _ROBUST_SQL),
+    "agg_function_battery": (q_agg_function_battery, _AGG_BATTERY_SQL),
+    "unpivot_metrics": (q_unpivot_metrics, _UNPIVOT_SQL),
+    "map_functions": (q_map_functions, _MAP_FUNCTIONS_SQL),
+    "fuzzy_name_match": (q_fuzzy_name_match, _FUZZY_MATCH_SQL),
+    "pipe_syntax_report": (q_pipe_syntax_report, _PIPE_SYNTAX_SQL),
+    "mv_rewrite": (q_mv_rewrite, _MV_REWRITE_SQL),
+    "udtf_demo": (q_udtf_demo, _UDTF_DEMO_SQL),
+    "quantile_accuracy": (q_quantile_accuracy, _QUANTILE_ACCURACY_SQL),
+    "distributed_rank": (q_distributed_rank, _DISTRIBUTED_RANK_SQL),
+}

@@ -18,6 +18,8 @@ docstring for the store-sketches / merge-at-query-time scale pattern.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -387,20 +389,15 @@ _STREAMING_KLL_SQL = """
 """
 
 
-QUERIES_SKETCH = {
-    "hll_rollup": q_hll_rollup,
-    "kll_rollup": q_kll_rollup,
-    "theta_set_ops": q_theta_set_ops,
-    "cms_heavy_hitters": q_cms_heavy_hitters,
-    "streaming_hll_distinct": q_streaming_hll_distinct,
-    "streaming_kll_quantiles": q_streaming_kll_quantiles,
-}
+# ---------------------------------------------------------------------------
+# Registry
+# ---------------------------------------------------------------------------
 
-ORACLES_SKETCH = {
-    "hll_rollup": _HLL_ROLLUP_SQL,
-    "kll_rollup": _KLL_ROLLUP_SQL,
-    "theta_set_ops": _THETA_SET_OPS_SQL,
-    "cms_heavy_hitters": _CMS_HEAVY_HITTERS_SQL,
-    "streaming_hll_distinct": _STREAMING_HLL_SQL,
-    "streaming_kll_quantiles": _STREAMING_KLL_SQL,
+REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]] = {
+    "hll_rollup": (q_hll_rollup, _HLL_ROLLUP_SQL),
+    "kll_rollup": (q_kll_rollup, _KLL_ROLLUP_SQL),
+    "theta_set_ops": (q_theta_set_ops, _THETA_SET_OPS_SQL),
+    "cms_heavy_hitters": (q_cms_heavy_hitters, _CMS_HEAVY_HITTERS_SQL),
+    "streaming_hll_distinct": (q_streaming_hll_distinct, _STREAMING_HLL_SQL),
+    "streaming_kll_quantiles": (q_streaming_kll_quantiles, _STREAMING_KLL_SQL),
 }

@@ -635,27 +635,6 @@ _RRF_FUSION_SQL = r"""
 """
 
 
-QUERIES_STATS: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "pettitt_changepoint": q_pettitt_changepoint,
-    "weighted_median": q_weighted_median,
-    "bitmap_distinct": q_bitmap_distinct,
-    "decay_attribution": q_decay_attribution,
-    "nelson_aalen": q_nelson_aalen,
-    "vocab_coverage": q_vocab_coverage,
-    "rrf_fusion": q_rrf_fusion,
-}
-
-ORACLES_STATS: dict[str, str] = {
-    "pettitt_changepoint": _PETTITT_SQL,
-    "weighted_median": _WEIGHTED_MEDIAN_SQL,
-    "bitmap_distinct": _BITMAP_DISTINCT_SQL,
-    "decay_attribution": _DECAY_ATTRIBUTION_SQL,
-    "nelson_aalen": _NELSON_AALEN_SQL,
-    "vocab_coverage": _VOCAB_COVERAGE_SQL,
-    "rrf_fusion": _RRF_FUSION_SQL,
-}
-
-
 # ---------------------------------------------------------------------------
 # Asymmetric near-containment screen: the subset-duplicate detector
 # Jaccard misses (a doc pasted inside a 10x larger one has J ~= 0.1
@@ -990,23 +969,6 @@ _STREAMING_BITMAP_SQL = """
 """
 
 
-QUERIES_STATS.update({
-    "containment_screen": q_containment_screen,
-    "readability_scores": q_readability_scores,
-    "seasonal_decomposition": q_seasonal_decomposition,
-    "time_to_convert": q_time_to_convert,
-    "streaming_bitmap_distinct": q_streaming_bitmap_distinct,
-})
-
-ORACLES_STATS.update({
-    "containment_screen": _CONTAINMENT_SQL,
-    "readability_scores": _READABILITY_SQL,
-    "seasonal_decomposition": _SEASONAL_DECOMP_SQL,
-    "time_to_convert": _TIME_TO_CONVERT_SQL,
-    "streaming_bitmap_distinct": _STREAMING_BITMAP_SQL,
-})
-
-
 # ---------------------------------------------------------------------------
 # Seasonal anomaly flags: months whose decomposition residual exceeds
 # 2.5 sigma-equivalents of the per-priority residual MAD — composed from
@@ -1331,21 +1293,6 @@ _BUSDAY_SQL = """
 """
 
 
-QUERIES_STATS.update({
-    "seasonal_anomaly": q_seasonal_anomaly,
-    "trimmed_stats": q_trimmed_stats,
-    "hierarchy_shares": q_hierarchy_shares,
-    "busday_latency": q_busday_latency,
-})
-
-ORACLES_STATS.update({
-    "seasonal_anomaly": _SEASONAL_ANOMALY_SQL,
-    "trimmed_stats": _TRIMMED_SQL,
-    "hierarchy_shares": _HIERARCHY_SQL,
-    "busday_latency": _BUSDAY_SQL,
-})
-
-
 # ---------------------------------------------------------------------------
 # MMR diverse top-k: retrieval diversification — greedy maximal
 # marginal relevance over the top-24 cosine candidates to the query
@@ -1494,10 +1441,6 @@ _MMR_SQL = """
     FROM final f JOIN cand c ON f.vec_id = c.vec_id
     ORDER BY sel_rank
 """
-
-
-QUERIES_STATS.update({"mmr_diverse_topk": q_mmr_diverse_topk})
-ORACLES_STATS.update({"mmr_diverse_topk": _MMR_SQL})
 
 
 # ---------------------------------------------------------------------------
@@ -1840,19 +1783,6 @@ _SPRT_SQL = """
 """
 
 
-QUERIES_STATS.update({
-    "proximity_search": q_proximity_search,
-    "token_pmi": q_token_pmi,
-    "sprt_decision": q_sprt_decision,
-})
-
-ORACLES_STATS.update({
-    "proximity_search": _PROXIMITY_SQL,
-    "token_pmi": _PMI_SQL,
-    "sprt_decision": _SPRT_SQL,
-})
-
-
 # ---------------------------------------------------------------------------
 # Chi-square test of independence: market segment × order priority.
 # Exact-ppm statistic: each cell's (o-e)^2/e is pure IEEE arithmetic on
@@ -2072,16 +2002,6 @@ _GROWTH_STREAKS_SQL = """
 """
 
 
-QUERIES_STATS.update({
-    "chi_square_independence": q_chi_square_independence,
-    "growth_streaks": q_growth_streaks,
-})
-ORACLES_STATS.update({
-    "chi_square_independence": _CHI2_SQL,
-    "growth_streaks": _GROWTH_STREAKS_SQL,
-})
-
-
 # ---------------------------------------------------------------------------
 # Max drawdown: peak-to-trough revenue decline per priority — running
 # max + argmax window, all integer cents.
@@ -2212,16 +2132,6 @@ _BURSTINESS_SQL = """
            END AS overdispersed
     FROM agg
 """
-
-
-QUERIES_STATS.update({
-    "max_drawdown": q_max_drawdown,
-    "burstiness": q_burstiness,
-})
-ORACLES_STATS.update({
-    "max_drawdown": _MAX_DRAWDOWN_SQL,
-    "burstiness": _BURSTINESS_SQL,
-})
 
 
 # ---------------------------------------------------------------------------
@@ -2452,16 +2362,6 @@ _DID_SQL = """
 """
 
 
-QUERIES_STATS.update({
-    "logrank_test": q_logrank_test,
-    "did_estimate": q_did_estimate,
-})
-ORACLES_STATS.update({
-    "logrank_test": _LOGRANK_SQL,
-    "did_estimate": _DID_SQL,
-})
-
-
 # ---------------------------------------------------------------------------
 # Stratified exact-matching ATT: BUILDING customers vs others matched
 # on (nation, $2000-balance-bucket) strata, outcome = total spend.
@@ -2683,16 +2583,6 @@ _BOOTSTRAP_SQL = f"""
 """
 
 
-QUERIES_STATS.update({
-    "stratified_att": q_stratified_att,
-    "bootstrap_ci": q_bootstrap_ci,
-})
-ORACLES_STATS.update({
-    "stratified_att": _STRATIFIED_ATT_SQL,
-    "bootstrap_ci": _BOOTSTRAP_SQL,
-})
-
-
 # ---------------------------------------------------------------------------
 # KL divergence of each day's event-type mix against the global mix —
 # the information-theoretic drift monitor next to psi_drift/tv_distance.
@@ -2885,16 +2775,6 @@ _PEAK_SQL = """
 """
 
 
-QUERIES_STATS.update({
-    "kl_daily_mix": q_kl_daily_mix,
-    "peak_detection": q_peak_detection,
-})
-ORACLES_STATS.update({
-    "kl_daily_mix": _KL_DAILY_SQL,
-    "peak_detection": _PEAK_SQL,
-})
-
-
 # ---------------------------------------------------------------------------
 # Incremental variance maintenance: (n, Σx, Σx²) moments stored for
 # history, a delta batch folded in by pure addition, variance derived
@@ -3054,16 +2934,6 @@ _MEDIAN_OF_MEDIANS_SQL = """
 """
 
 
-QUERIES_STATS.update({
-    "incremental_variance": q_incremental_variance,
-    "median_of_medians": q_median_of_medians,
-})
-ORACLES_STATS.update({
-    "incremental_variance": _INCR_VARIANCE_SQL,
-    "median_of_medians": _MEDIAN_OF_MEDIANS_SQL,
-})
-
-
 # ---------------------------------------------------------------------------
 # Volume guardrail: day-over-day event volume change in exact ppm with
 # a ±50% alarm — the first data-quality gate every ingest pipeline
@@ -3191,16 +3061,6 @@ _OUT_OF_ORDER_SQL = """
 """
 
 
-QUERIES_STATS.update({
-    "volume_guardrail": q_volume_guardrail,
-    "out_of_order_stats": q_out_of_order_stats,
-})
-ORACLES_STATS.update({
-    "volume_guardrail": _VOLUME_GUARDRAIL_SQL,
-    "out_of_order_stats": _OUT_OF_ORDER_SQL,
-})
-
-
 # ---------------------------------------------------------------------------
 # Empirical-Bayes shrinkage of per-nation mean balances toward the
 # global mean with weight n/(n+λ) — the smoothing every per-group
@@ -3320,16 +3180,6 @@ _DEBOUNCE_SQL = """
 """
 
 
-QUERIES_STATS.update({
-    "eb_shrinkage": q_eb_shrinkage,
-    "debounce_events": q_debounce_events,
-})
-ORACLES_STATS.update({
-    "eb_shrinkage": _EB_SHRINKAGE_SQL,
-    "debounce_events": _DEBOUNCE_SQL,
-})
-
-
 # ---------------------------------------------------------------------------
 # Haar wavelet energy of the monthly revenue series (3 dyadic levels):
 # pair-difference details computed by (rank div 2) self-grouping —
@@ -3440,10 +3290,6 @@ _WAVELET_SQL = """
 """
 
 
-QUERIES_STATS.update({"wavelet_energy": q_wavelet_energy})
-ORACLES_STATS.update({"wavelet_energy": _WAVELET_SQL})
-
-
 # ---------------------------------------------------------------------------
 # First-order Markov removal-effect attribution (round 6): the
 # data-driven attribution model the positional family can't express —
@@ -3550,10 +3396,6 @@ ORDER BY channel
 """
 
 
-QUERIES_STATS.update({"markov_attribution": q_markov_attribution})
-ORACLES_STATS.update({"markov_attribution": _MARKOV_SQL})
-
-
 # ---------------------------------------------------------------------------
 # Exact Shapley-value attribution (round 6): completes the attribution
 # family (linear / position / decay / markov) with the coalition-game
@@ -3616,5 +3458,48 @@ ORDER BY channel
 """
 
 
-QUERIES_STATS.update({"shapley_attribution": q_shapley_attribution})
-ORACLES_STATS.update({"shapley_attribution": _SHAPLEY_SQL})
+# ---------------------------------------------------------------------------
+# Registry
+# ---------------------------------------------------------------------------
+
+REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]] = {
+    "pettitt_changepoint": (q_pettitt_changepoint, _PETTITT_SQL),
+    "weighted_median": (q_weighted_median, _WEIGHTED_MEDIAN_SQL),
+    "bitmap_distinct": (q_bitmap_distinct, _BITMAP_DISTINCT_SQL),
+    "decay_attribution": (q_decay_attribution, _DECAY_ATTRIBUTION_SQL),
+    "nelson_aalen": (q_nelson_aalen, _NELSON_AALEN_SQL),
+    "vocab_coverage": (q_vocab_coverage, _VOCAB_COVERAGE_SQL),
+    "rrf_fusion": (q_rrf_fusion, _RRF_FUSION_SQL),
+    "containment_screen": (q_containment_screen, _CONTAINMENT_SQL),
+    "readability_scores": (q_readability_scores, _READABILITY_SQL),
+    "seasonal_decomposition": (q_seasonal_decomposition, _SEASONAL_DECOMP_SQL),
+    "time_to_convert": (q_time_to_convert, _TIME_TO_CONVERT_SQL),
+    "streaming_bitmap_distinct": (q_streaming_bitmap_distinct, _STREAMING_BITMAP_SQL),
+    "seasonal_anomaly": (q_seasonal_anomaly, _SEASONAL_ANOMALY_SQL),
+    "trimmed_stats": (q_trimmed_stats, _TRIMMED_SQL),
+    "hierarchy_shares": (q_hierarchy_shares, _HIERARCHY_SQL),
+    "busday_latency": (q_busday_latency, _BUSDAY_SQL),
+    "mmr_diverse_topk": (q_mmr_diverse_topk, _MMR_SQL),
+    "proximity_search": (q_proximity_search, _PROXIMITY_SQL),
+    "token_pmi": (q_token_pmi, _PMI_SQL),
+    "sprt_decision": (q_sprt_decision, _SPRT_SQL),
+    "chi_square_independence": (q_chi_square_independence, _CHI2_SQL),
+    "growth_streaks": (q_growth_streaks, _GROWTH_STREAKS_SQL),
+    "max_drawdown": (q_max_drawdown, _MAX_DRAWDOWN_SQL),
+    "burstiness": (q_burstiness, _BURSTINESS_SQL),
+    "logrank_test": (q_logrank_test, _LOGRANK_SQL),
+    "did_estimate": (q_did_estimate, _DID_SQL),
+    "stratified_att": (q_stratified_att, _STRATIFIED_ATT_SQL),
+    "bootstrap_ci": (q_bootstrap_ci, _BOOTSTRAP_SQL),
+    "kl_daily_mix": (q_kl_daily_mix, _KL_DAILY_SQL),
+    "peak_detection": (q_peak_detection, _PEAK_SQL),
+    "incremental_variance": (q_incremental_variance, _INCR_VARIANCE_SQL),
+    "median_of_medians": (q_median_of_medians, _MEDIAN_OF_MEDIANS_SQL),
+    "volume_guardrail": (q_volume_guardrail, _VOLUME_GUARDRAIL_SQL),
+    "out_of_order_stats": (q_out_of_order_stats, _OUT_OF_ORDER_SQL),
+    "eb_shrinkage": (q_eb_shrinkage, _EB_SHRINKAGE_SQL),
+    "debounce_events": (q_debounce_events, _DEBOUNCE_SQL),
+    "wavelet_energy": (q_wavelet_energy, _WAVELET_SQL),
+    "markov_attribution": (q_markov_attribution, _MARKOV_SQL),
+    "shapley_attribution": (q_shapley_attribution, _SHAPLEY_SQL),
+}

@@ -1116,42 +1116,27 @@ _RETURNED_ITEM_SQL = f"""
 """
 
 
-QUERIES_TPCH: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "sole_blame_supplier": q_sole_blame_supplier,
-    "idle_customer_balance": q_idle_customer_balance,
-    "large_order_customers": q_large_order_customers,
-    "top_revenue_supplier": q_top_revenue_supplier,
-    "important_part_value": q_important_part_value,
-    "promo_revenue_ratio": q_promo_revenue_ratio,
-    "disjunctive_bracket_revenue": q_disjunctive_bracket_revenue,
-    "national_market_share": q_national_market_share,
-    "interval_overlap_attribution": q_interval_overlap_attribution,
-    "snapshot_diff_audit": q_snapshot_diff_audit,
-    "scd2_point_in_time": q_scd2_point_in_time,
-    "grouped_models": q_grouped_models,
-    "incremental_rollup": q_incremental_rollup,
-    "sampled_groupby": q_sampled_groupby,
-    "volume_shipping": q_volume_shipping,
-    "product_type_profit": q_product_type_profit,
-    "returned_item_report": q_returned_item_report,
-}
+# ---------------------------------------------------------------------------
+# Registry
+# ---------------------------------------------------------------------------
 
-ORACLES_TPCH: dict[str, str] = {
-    "sole_blame_supplier": _SOLE_BLAME_SQL,
-    "idle_customer_balance": _IDLE_CUSTOMER_SQL,
-    "large_order_customers": _LARGE_ORDER_SQL,
-    "top_revenue_supplier": _TOP_REVENUE_SQL,
-    "important_part_value": _IMPORTANT_PART_SQL,
-    "promo_revenue_ratio": _PROMO_RATIO_SQL,
-    "disjunctive_bracket_revenue": _DISJUNCTIVE_SQL,
-    "national_market_share": _MARKET_SHARE_SQL,
-    "interval_overlap_attribution": _INTERVAL_OVERLAP_SQL,
-    "snapshot_diff_audit": _SNAPSHOT_DIFF_SQL,
-    "scd2_point_in_time": _SCD2_PIT_SQL,
-    "incremental_rollup": _INCREMENTAL_ROLLUP_SQL,
-    "sampled_groupby": _SAMPLED_GROUPBY_SQL,
-    "grouped_models": _grouped_models_sql(),
-    "volume_shipping": _VOLUME_SHIPPING_SQL,
-    "product_type_profit": _PRODUCT_PROFIT_SQL,
-    "returned_item_report": _RETURNED_ITEM_SQL,
+REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]] = {
+    "sole_blame_supplier": (q_sole_blame_supplier, _SOLE_BLAME_SQL),
+    "idle_customer_balance": (q_idle_customer_balance, _IDLE_CUSTOMER_SQL),
+    "large_order_customers": (q_large_order_customers, _LARGE_ORDER_SQL),
+    "top_revenue_supplier": (q_top_revenue_supplier, _TOP_REVENUE_SQL),
+    "important_part_value": (q_important_part_value, _IMPORTANT_PART_SQL),
+    "promo_revenue_ratio": (q_promo_revenue_ratio, _PROMO_RATIO_SQL),
+    "disjunctive_bracket_revenue": (q_disjunctive_bracket_revenue, _DISJUNCTIVE_SQL),
+    "national_market_share": (q_national_market_share, _MARKET_SHARE_SQL),
+    "interval_overlap_attribution": (q_interval_overlap_attribution,
+                                     _INTERVAL_OVERLAP_SQL),
+    "snapshot_diff_audit": (q_snapshot_diff_audit, _SNAPSHOT_DIFF_SQL),
+    "scd2_point_in_time": (q_scd2_point_in_time, _SCD2_PIT_SQL),
+    "grouped_models": (q_grouped_models, _grouped_models_sql()),
+    "incremental_rollup": (q_incremental_rollup, _INCREMENTAL_ROLLUP_SQL),
+    "sampled_groupby": (q_sampled_groupby, _SAMPLED_GROUPBY_SQL),
+    "volume_shipping": (q_volume_shipping, _VOLUME_SHIPPING_SQL),
+    "product_type_profit": (q_product_type_profit, _PRODUCT_PROFIT_SQL),
+    "returned_item_report": (q_returned_item_report, _RETURNED_ITEM_SQL),
 }

@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 
 from sf_datalake_spark.functions.text import bm25_topk
 from sf_datalake_spark.operators.funnel import funnel_counts, funnel_stage_times
-from sf_datalake_spark.operators.itemsets import frequent_pairs, pair_lift
+from sf_datalake_spark.operators.itemsets import frequent_pairs
 
 
 def _ts(s: str) -> dt.datetime:
@@ -177,16 +177,6 @@ class TestFrequentPairs:
         assert [(r["item_1"], r["item_2"], r["support"]) for r in out] == [
             (10, 20, 1)
         ]
-
-    def test_pair_lift(self, spark):
-        m = self._baskets(spark, [(1, 10), (1, 20), (2, 10), (2, 20), (3, 10)])
-        pairs = frequent_pairs(m, "b", "i", min_support=2)
-        supports = spark.createDataFrame(
-            [(10, 3), (20, 2)], "item bigint, support bigint"
-        )
-        row = pair_lift(pairs, supports, n_baskets=3).collect()[0]
-        # lift = (2/3) / ((3/3)*(2/3)) = 1.0
-        assert row["lift"] == 1.0
 
 
 class TestBM25:

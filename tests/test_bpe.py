@@ -6,7 +6,7 @@ from __future__ import annotations
 
 from collections import Counter
 
-from sf_datalake_spark.operators.bpe import bpe_segment, train_bpe
+from sf_datalake_spark.operators.bpe import train_bpe
 
 
 def _reference_bpe(texts, num_merges, min_pair_count=2):
@@ -58,25 +58,19 @@ def test_merge_table_matches_reference(spark):
 
 
 def test_overlapping_pair_merges_left_to_right(spark):
-    # "xxx" with merge (x,x): greedy left fold -> [xx, x], never [x, xx]
+    # "xxx" with merge (x,x): greedy left fold -> [xx, x], never [x, xx],
+    # so the second merge is (xx, x) on both the driver and the
+    # distributed path
     df = spark.createDataFrame([(0, "xxx xxx xx")], "doc_id int, text string")
-    merges = train_bpe(df, "text", num_merges=1)
-    seg = bpe_segment(df, "doc_id", "text", merges).first()["bpe_tokens"]
-    assert seg == ["xx", "x", "xx", "x", "xx"]
-
-
-def test_segment_matches_reference_types(spark):
-    df = spark.createDataFrame([(i, t) for i, t in enumerate(_TEXTS)],
-                               "doc_id int, text string")
-    merges = train_bpe(df, "text", num_merges=8)
-    want_merges, want_types = _reference_bpe(_TEXTS, 8)
-    seg = {
-        r["doc_id"]: r["bpe_tokens"]
-        for r in bpe_segment(df, "doc_id", "text", merges).collect()
-    }
-    for i, t in enumerate(_TEXTS):
-        expect = [s for w in t.split() for s in want_types[w]]
-        assert seg[i] == expect
+    want = [(1, "x", "x", "xx", 5), (2, "xx", "x", "xxx", 2)]
+    assert _reference_bpe(["xxx xxx xx"], 2)[0] == want
+    for budget in ({}, {"driver_type_budget": 0}):
+        got = [
+            tuple(r)
+            for r in train_bpe(df, "text", num_merges=2, **budget)
+            .orderBy("rank").collect()
+        ]
+        assert got == want
 
 
 def test_min_pair_count_stops_training(spark):

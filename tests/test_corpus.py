@@ -395,47 +395,6 @@ def test_quality_prune_per_group_cut(spark):
         quality_prune(df, "score", 0.0, "doc_id")
 
 
-def test_observe_gate_metrics_ride_the_action(spark):
-    """observe(): the gate's monitoring counters must come out of the
-    SAME job that materializes the data (no second corpus scan) and
-    match a direct aggregation exactly."""
-    from pyspark.sql import functions as F
-
-    from sf_datalake_spark.operators.corpus import (
-        gopher_quality_filter,
-        observe_gate,
-    )
-
-    # dedicated session: observe() initializes the session's lazily
-    # created (non-serializable) observationManager, which would break
-    # MLlib model-transform closures in LATER tests sharing the main
-    # session — see observe_gate's docstring
-    s2 = spark.newSession()
-    docs = s2.createDataFrame(
-        [
-            (1, "the quick brown fox jumps over the lazy dog " * 10),
-            (2, "short"),
-            (3, "a a a a a a a a a a a a a a a a a a a a a a a a a "
-                "a a a a a a a a a a a a a a a a a a a a a a a a a a"),
-        ],
-        "doc_id int, text string",
-    )
-    gated = gopher_quality_filter(docs, min_tokens=20)
-    observed, obs = observe_gate(gated)
-    rows = observed.collect()  # first action populates the observation
-    m = obs.get
-    assert m["n_docs"] == len(rows) == 3
-    direct = gated.agg(
-        F.sum("keep").alias("k"),
-        F.sum(1 - F.col("r_token_count")).alias("f_tok"),
-        F.sum(1 - F.col("r_dup_tokens")).alias("f_dup"),
-    ).collect()[0]
-    assert m["n_kept"] == direct["k"]
-    assert m["n_fail_token_count"] == direct["f_tok"]
-    assert m["n_fail_dup_tokens"] == direct["f_dup"]
-    assert m["n_fail_token_count"] >= 1  # doc 2 is too short
-
-
 def test_hashed_linear_score_dict_weights_and_plan(spark):
     """Dict-weight path: score equals the hand-computed sigmoid of the
     summed bucket weights; unknown buckets contribute 0; empty text

@@ -466,46 +466,6 @@ def test_semantic_dedup_pairs_recovers_planted_dups(spark):
     assert dropped == 4  # exactly the four twins
 
 
-def test_semantic_pairs_against_incremental_contract(spark):
-    """Incremental SemDeDup: a new batch matches planted stored twins
-    (match_side='stored'), within-batch twins emit once with
-    new_id < match_id (match_side='new'), and untouched stored-stored
-    pairs never appear — per-batch cost, not corpus re-comparison."""
-    import numpy as np
-
-    from sf_datalake_spark.operators.similarity import semantic_pairs_against
-
-    rng = np.random.RandomState(11)
-    base_a = rng.rand(8) + np.array([10.0] + [0.0] * 7)
-    base_b = rng.rand(8) + np.array([0.0] * 7 + [10.0])
-    stored_rows, new_rows = [], []
-    for i in range(20):
-        v = base_a + rng.rand(8) * 0.5 if i < 10 else base_b + rng.rand(8) * 0.5
-        stored_rows.append((i, [float(x) for x in v]))
-    # stored has an internal twin pair (0 ~ 9000) that must NOT appear
-    stored_rows.append((9000, [float(x + 1e-4) for x in stored_rows[0][1]]))
-    # new batch: twin of stored 5, twin of stored 15, an internal twin
-    # pair (100/101), and a far-away novel vector
-    new_rows.append((100, [float(x + 1e-4) for x in stored_rows[5][1]]))
-    new_rows.append((101, [float(x + 2e-4) for x in stored_rows[5][1]]))
-    new_rows.append((102, [float(x + 1e-4) for x in stored_rows[15][1]]))
-    new_rows.append((103, [float(x) for x in (rng.rand(8) + 20.0)]))
-    stored = spark.createDataFrame(stored_rows, "vec_id long, embedding array<double>")
-    new = spark.createDataFrame(new_rows, "vec_id long, embedding array<double>")
-    out = semantic_pairs_against(
-        new, stored, threshold=0.9999, n_clusters=2, seed=7
-    ).collect()
-    got = {(r["new_id"], r["match_id"]): r["match_side"] for r in out}
-    assert got.get((100, 5)) == "stored"
-    assert got.get((101, 5)) == "stored"
-    assert got.get((102, 15)) == "stored"
-    assert got.get((100, 101)) == "new"
-    assert (101, 100) not in got  # emitted once, ordered
-    assert all(nid != 103 for nid, _ in got)  # novel vector matches nothing
-    # stored-stored twin NEVER re-compared
-    assert not any(set(p) == {0, 9000} for p in got)
-
-
 def test_nearest_centroid_exact(spark):
     from sf_datalake_spark.operators.similarity import nearest_centroid_exact
 

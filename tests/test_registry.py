@@ -67,10 +67,38 @@ def test_registry_invariants():
     # the rotation)
     missing = {n for n in entry._ATTESTED if n not in q}
     assert not missing, f"attested names vanished from registry: {missing}"
-    # _NEW_R06 names must all exist too (typos here silently change
-    # rotation order without failing anything else)
-    missing_new = {n for n in entry._NEW_R06 if n not in q}
-    assert not missing_new, f"_NEW_R06 names not registered: {missing_new}"
+
+
+def test_module_tables_declare_each_name_once():
+    """Every ``sf_datalake_spark/queries*.py`` module declares one
+    ``REGISTRY`` table of name → (query, oracle SQL or None).  A name
+    declared in two tables would be silently shadowed by the merge, so
+    the tables must add up to exactly the driver-visible registry; the
+    rows-only names are exactly the ``None`` entries."""
+    import importlib
+
+    import __spark_entry__ as entry
+
+    paths = sorted(glob.glob(os.path.join(REPO, "sf_datalake_spark", "queries*.py")))
+    tables = [
+        importlib.import_module(
+            "sf_datalake_spark." + os.path.basename(p)[:-3]
+        ).REGISTRY
+        for p in paths
+    ]
+    assert len(tables) == 11
+    declared = [name for t in tables for name in t]
+    assert len(declared) == 306
+    q = entry.queries()
+    assert len(q) == 306 and set(q) == set(declared)
+
+    oracles = {name: sql for t in tables for name, (_, sql) in t.items()}
+    oracled = {name: sql for name, sql in oracles.items() if sql is not None}
+    assert entry.oracle_sql() == oracled
+    assert all(isinstance(sql, str) and "SELECT" in sql.upper()
+               for sql in oracled.values())
+    rows_only = set(oracles) - set(oracled)
+    assert set(q) - set(oracled) == rows_only and len(rows_only) == 7
 
 
 def test_registry_outputs_are_scalar_typed(spark):
