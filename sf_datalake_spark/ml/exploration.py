@@ -21,6 +21,8 @@ from pyspark.ml.feature import PCA, VectorAssembler
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from sf_datalake_spark.session import pinned
+
 
 def pca_project(
     df: DataFrame,
@@ -500,21 +502,15 @@ def pca_top2_fixed_basis_ppm(
     # per round) disappears — measured 2 jobs/round → 1.  Still
     # size-derived: a billion-row matrix gets thousands of partitions
     # and the exchange cost is then negligible against the scan.
-    # Keep a handle to the frame fit_ready cached: the coalesce(1)
-    # below is a different plan (Repartition over the cached scan) and
-    # unpersist() on it does not release the cache entry — the
-    # r10 advice-verified leak.  The finally unpersists `cached`.
-    cached, _ = fit_ready(cen, target_rows_per_partition=250_000,
-                          min_partitions=1)
-    cen = cached
-    if cen.rdd.getNumPartitions() == 1:
-        # a cached scan reports UNKNOWN partitioning even with one
-        # partition, so the planner still inserts the partial→final
-        # exchange; Coalesce(1) advertises SinglePartition and the
-        # per-round agg plans as ONE stage (measured: 2 jobs/round → 1,
-        # plan loses the Exchange).  Data-wise a no-op.
-        cen = cen.coalesce(1)
-    try:
+    with fit_ready(cen, target_rows_per_partition=250_000,
+                   min_partitions=1) as (cen, _):
+        if cen.rdd.getNumPartitions() == 1:
+            # a cached scan reports UNKNOWN partitioning even with one
+            # partition, so the planner still inserts the partial→final
+            # exchange; Coalesce(1) advertises SinglePartition and the
+            # per-round agg plans as ONE stage (measured: 2 jobs/round → 1,
+            # plan loses the Exchange).  Data-wise a no-op.
+            cen = cen.coalesce(1)
         frag = pca_ppm_fragments(d, n_iter, div="div")
         v1 = _pca_power_iter_ppm(cen.filter("__fit"), d, n_iter)
 
@@ -526,16 +522,15 @@ def pca_top2_fixed_basis_ppm(
 
         p1 = cen.selectExpr("*", f"{lit_sd(v1)} AS sd")
         # deflated matrix: already narrow after cen's coalesce (it reads
-        # the cen cache partition-for-partition), so a plain persist
-        # keeps the width fit_ready chose above
-        defl = p1.selectExpr(
+        # the cen cache partition-for-partition), so a plain pin keeps
+        # the width fit_ready chose above
+        with pinned(p1.selectExpr(
             *id_cols, "__fit", "sd AS pc1q",
             *[
                 frag["defl"][f"c{i}"].replace(f"v{i}", str(v1[i])) + f" AS c{i}"
                 for i in range(d)
             ],
-        ).persist()
-        try:
+        )) as defl:
             v2 = _pca_power_iter_ppm(defl.filter("__fit"), d, n_iter)
             out = defl.selectExpr(
                 *id_cols, "pc1q", f"{lit_sd(v2)} AS pc2q"
@@ -544,10 +539,6 @@ def pca_top2_fixed_basis_ppm(
                 F.col("pc1q").alias("pc1_ppm"),
                 F.col("pc2q").alias("pc2_ppm"),
             ).localCheckpoint(eager=True)
-        finally:
-            defl.unpersist()
-    finally:
-        cached.unpersist()
     return out
 
 

@@ -26,6 +26,8 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from sf_datalake_spark.session import scoped_confs
+
 
 def _irls_logistic(
     X: np.ndarray,
@@ -334,18 +336,12 @@ def irls_logistic_groups_ppm(
     micro-units (w0 = intercept).
     """
     frag = irls_ppm_fragments(fx1, fx2, reg, div="div")
-    # Persist the 4-int-column design matrix: every Newton round (and
-    # nothing else) re-scans it, so without this the upstream plan —
-    # typically a join tree — re-executes n_iter+1 times (26 s → ~7 s
-    # at sf0.1).  MEMORY_AND_DISK: at cluster scale the matrix is
-    # |rows| × 32 B, the standard cached-training-set shape MLlib's
-    # iterative fitters use; spill is the safety valve, not the plan.
     data = df.select(
         F.col(group_col).alias("grp"),
         F.col(x1q_col).cast("bigint").alias("x1q"),
         F.col(x2q_col).cast("bigint").alias("x2q"),
         F.col(label_col).cast("bigint").alias("y"),
-    ).persist()
+    )
     spark = df.sparkSession
     grp_type = dict(data.dtypes)["grp"]
     coef_schema = (
@@ -357,41 +353,38 @@ def irls_logistic_groups_ppm(
     ]
     global _LAST_IRLS_ROUNDS
     _LAST_IRLS_ROUNDS = 0
-    try:
-        # Coefficients live on the DRIVER between rounds (r10, guide
-        # §2.4/§5): they are |groups| rows of 4 integers — collecting
-        # them costs nothing, and rebuilding each round's input as a
-        # literal LocalRelation removes BOTH per-round coordination
-        # jobs the old DataFrame-resident loop paid (the
-        # localCheckpoint(eager) materialization and the broadcast
-        # build over a checkpointed frame): each Newton round is now
-        # exactly ONE job — scan the cached matrix, map-side-combine
-        # the 9 exact-integer sums, Cramer-solve the 5-row aggregate
-        # inside Catalyst, collect.  Numerically NOTHING changes: the
-        # round map is the same Catalyst expression tree over the same
-        # exact integers, only the transport of the tiny coefficient
-        # frame differs (bigint → Python int → bigint, exact).
-        # Right-size the cached matrix before the rounds (r10, the
-        # fit_ready policy, guide §2.2/§2.6): the projection inherits
-        # the upstream shuffle width (32 near-empty partitions for a
-        # ~150k-row panel slice), and every Newton round re-pays that
-        # many task launches for microseconds of compute each —
-        # measured at sf0.1: 9 rounds on 32 partitions ≈ 10 s vs
-        # ≈ 4.3 s on 4.  ~250k rows/partition ≈ 10 MB of 4-bigint rows;
-        # the floor of 4 keeps the partial aggregation parallel.  At
-        # cluster scale a billion-row matrix still gets thousands of
-        # partitions — the coalesce is size-derived, not a constant.
-        from sf_datalake_spark.ml.models import fit_ready
+    # Coefficients live on the DRIVER between rounds (r10, guide
+    # §2.4/§5): they are |groups| rows of 4 integers — collecting
+    # them costs nothing, and rebuilding each round's input as a
+    # literal LocalRelation removes BOTH per-round coordination
+    # jobs the old DataFrame-resident loop paid (the
+    # localCheckpoint(eager) materialization and the broadcast
+    # build over a checkpointed frame): each Newton round is now
+    # exactly ONE job — scan the cached matrix, map-side-combine
+    # the 9 exact-integer sums, Cramer-solve the 5-row aggregate
+    # inside Catalyst, collect.  Numerically NOTHING changes: the
+    # round map is the same Catalyst expression tree over the same
+    # exact integers, only the transport of the tiny coefficient
+    # frame differs (bigint → Python int → bigint, exact).
+    # Right-size the cached matrix before the rounds (r10, the
+    # fit_ready policy, guide §2.2/§2.6): the projection inherits
+    # the upstream shuffle width (32 near-empty partitions for a
+    # ~150k-row panel slice), and every Newton round re-pays that
+    # many task launches for microseconds of compute each —
+    # measured at sf0.1: 9 rounds on 32 partitions ≈ 10 s vs
+    # ≈ 4.3 s on 4.  ~250k rows/partition ≈ 10 MB of 4-bigint rows;
+    # the floor of 4 keeps the partial aggregation parallel.  At
+    # cluster scale a billion-row matrix still gets thousands of
+    # partitions — the coalesce is size-derived, not a constant.  The
+    # cache itself matters as much: every Newton round (and nothing
+    # else) re-scans the matrix, so without it the upstream plan —
+    # typically a join tree — re-executes n_iter+1 times (26 s → ~7 s
+    # at sf0.1).
+    from sf_datalake_spark.ml.models import fit_ready
 
-        # Keep a handle to the frame fit_ready cached: coalesce(1)
-        # below produces a DIFFERENT plan (Repartition over the cached
-        # scan), and unpersist() on that wrapper does not match the
-        # cache entry — the r10 advice-verified leak.  The finally
-        # must unpersist `cached`, never the coalesced rebind.
-        cached, _ = fit_ready(
-            data, target_rows_per_partition=250_000, min_partitions=1
-        )
-        data = cached
+    with fit_ready(
+        data, target_rows_per_partition=250_000, min_partitions=1
+    ) as (data, _):
         if data.rdd.getNumPartitions() == 1:
             # Coalesce(1) advertises SinglePartition (a cached scan
             # reports UNKNOWN partitioning even at one partition), and
@@ -433,10 +426,8 @@ def irls_logistic_groups_ppm(
         # driver thread during the (sub-second) loop window would plan
         # without AQE; callers running multi-threaded drivers must
         # serialize around grouped-IRLS or accept that.  The previous
-        # value is restored in the finally even on error.
-        aqe_prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
-        try:
-            spark.conf.set("spark.sql.adaptive.enabled", "false")
+        # state is restored on exit, also on error.
+        with scoped_confs(spark, {"spark.sql.adaptive.enabled": "false"}):
             for _ in range(n_iter):
                 _LAST_IRLS_ROUNDS += 1
                 if use_lit:
@@ -465,10 +456,6 @@ def irls_logistic_groups_ppm(
                 coef_rows = nxt_rows
                 if stable:
                     break
-        finally:
-            spark.conf.set("spark.sql.adaptive.enabled", aqe_prev)
-    finally:
-        cached.unpersist()
     return spark.createDataFrame(
         coef_rows,
         f"grp {grp_type}, group_n bigint, "

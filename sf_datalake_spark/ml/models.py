@@ -7,6 +7,8 @@ RandomForestClassifier / GBTClassifier with config-driven params).
 
 from __future__ import annotations
 
+import contextlib
+
 from pyspark.ml.classification import (
     GBTClassifier,
     LogisticRegression,
@@ -37,12 +39,14 @@ def make_classifier(
     return _MODELS[name](featuresCol=features_col, labelCol=label_col, **params)
 
 
+@contextlib.contextmanager
 def fit_ready(
     df,
     target_rows_per_partition: int = 500_000,
     min_partitions: int = 1,
 ):
-    """Cache and right-size a training DataFrame before ``Estimator.fit``.
+    """Cache and right-size a training DataFrame for the ``with`` block
+    that runs ``Estimator.fit``: ``with fit_ready(df) as (train, n):``.
 
     MLlib's iterative trainers (tree ensembles especially) launch one
     Spark job per iteration over the training input, and the RDD they
@@ -59,23 +63,29 @@ def fit_ready(
     input), and coalesces to ``max(min_partitions,
     ceil(rows / target_rows_per_partition))`` — at 100 TB a billion-row
     training set still gets thousands of partitions, while a post-agg
-    panel slice collapses to a handful.  Returns ``(train_df, row_count)``;
-    call ``train_df.unpersist()`` when done with the fitted model.
+    panel slice collapses to a handful.  Yields ``(train_df,
+    row_count)``.  The block runs with exactly one cached copy, and it
+    is released on exit, also when the block raises; the block may
+    rebind ``train_df`` (say, to a further ``coalesce``) without
+    leaking it.
     """
     import math
 
-    cached = df.cache()
-    n = cached.count()
-    parts = max(min_partitions, math.ceil(n / max(1, target_rows_per_partition)))
-    if parts >= cached.rdd.getNumPartitions():
-        return cached, n
-    # Cache the coalesced result (cheap: reads the parent cache once),
-    # then drop the parent so the caller holds exactly one persisted
-    # frame and a single unpersist() frees everything.
-    out = cached.coalesce(parts).cache()
-    out.count()
-    cached.unpersist()
-    return out, n
+    train = df.cache()
+    try:
+        n = train.count()
+        parts = max(min_partitions, math.ceil(n / max(1, target_rows_per_partition)))
+        if parts < train.rdd.getNumPartitions():
+            # Cache the coalesced result (cheap: reads the parent cache
+            # once), then drop the parent.
+            parent, train = train, train.coalesce(parts).cache()
+            try:
+                train.count()
+            finally:
+                parent.unpersist()
+        yield train, n
+    finally:
+        train.unpersist()
 
 
 _MODEL_CLASSES = {

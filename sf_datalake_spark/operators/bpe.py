@@ -157,6 +157,8 @@ def _distributed_merge_loop(
     types: DataFrame, num_merges: int, min_pair_count: int
 ) -> DataFrame:
     spark = types.sparkSession
+    # Direct pins, not session.pinned: each round pins its successor
+    # before releasing its input, a rolling handover no with-block nests.
     types = types.persist()
     try:
         merges = []

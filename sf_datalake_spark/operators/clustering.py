@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from sf_datalake_spark.session import pinned
+
 _ENC = 1_000_000  # cell-coordinate encoding base (|cell| < 500k each axis)
 
 
@@ -106,8 +108,7 @@ def grid_density_clusters(
         )
     )
     cells = pts.groupBy("cell_key").agg(F.count("*").alias("n"))
-    core = cells.filter(F.col("n") >= min_pts).select("cell_key").persist()
-    try:
+    with pinned(cells.filter(F.col("n") >= min_pts).select("cell_key")) as core:
         offsets = [
             (i, j) for i in (-1, 0, 1) for j in (-1, 0, 1)
             if not (i == 0 and j == 0)
@@ -145,5 +146,3 @@ def grid_density_clusters(
             id_col,
             F.coalesce("cluster", F.lit(-1)).cast("bigint").alias("cluster"),
         )
-    finally:
-        core.unpersist()

@@ -19,9 +19,10 @@ chains.
 Scale design:
 - Each round is ONE equi-join (edges ⋈ labels on dst) + ONE groupBy(src)
   min — both shuffle on node id, and AQE coalesces as labels shrink.
-- The edge list is re-used every round; it is worth ``.persist()``-ing
-  by the caller for big graphs. Labels are ``localCheckpoint``-ed every
-  round, otherwise the iterative plan's lineage grows linearly and
+- The edge list is re-used every round, so the operators pin it
+  (``session.pinned``) for the loop and release it on exit, also when a
+  round fails. Labels are ``localCheckpoint``-ed every round,
+  otherwise the iterative plan's lineage grows linearly and
   Catalyst re-analyzes an ever-deeper tree (the classic iterative-Spark
   trap). On a cluster with unreliable executors, swap for reliable
   ``checkpoint()`` to a replicated store.
@@ -33,6 +34,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from sf_datalake_spark.session import pinned
 
 
 def connected_components(
@@ -61,9 +64,9 @@ def connected_components(
     identical min-label result (equivalence is unit-tested). Pass
     ``driver_threshold=0`` to force the distributed path.
 
-    For the distributed path the edge list is persisted internally (it
-    drives every round) and right-sized to
-    ``ceil(n_edges / edges_per_partition)`` partitions first: the
+    For the distributed path the edge list is pinned internally (it
+    drives every round) at its final width of at most
+    ``ceil(n_edges / edges_per_partition)`` partitions: the
     loop's per-round cost is dominated by task scheduling, not data,
     whenever partitions are thinner than a few million edges — a
     billion-edge graph still gets hundreds of partitions, while a
@@ -71,36 +74,24 @@ def connected_components(
     """
     import math
 
-    # Persist the DIRECTED list first: the (possibly expensive) upstream
+    # Pin the DIRECTED list first: the (possibly expensive) upstream
     # pair pipeline then runs exactly once — the undirected view and the
     # driver-side collect both read the cached rows.
-    directed = edges.select(
-        F.col(src).alias("src"), F.col(dst).alias("dst")
-    ).persist()
-    try:
+    with pinned(
+        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+    ) as directed:
         n_edges = directed.count()
         if n_edges <= driver_threshold:
             return _components_driver(directed)
         und = directed.union(
             directed.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        ).persist()
-        try:
-            parts = max(1, math.ceil(2 * n_edges / edges_per_partition))
-            if parts < und.rdd.getNumPartitions():
-                resized = und.repartition(parts).persist()
-                resized.count()
-                und.unpersist()
-                und = resized
-            else:
-                und.count()
+        )
+        parts = max(1, math.ceil(2 * n_edges / edges_per_partition))
+        if parts < und.rdd.getNumPartitions():
+            und = und.repartition(parts)
+        with pinned(und) as und:
+            und.count()
             labels, converged = _propagate(und, parts, max_iter)
-        finally:
-            und.unpersist()
-    finally:
-        # genuine persists: release them even when a round's action
-        # throws (task failure, interrupt) — the caller never sees
-        # these frames and could not clean them up otherwise.
-        directed.unpersist()
     if not converged:
         # Partially-propagated labels would silently split components.
         raise RuntimeError(
@@ -236,45 +227,38 @@ def pagerank(
     lineage flat (the identical discipline and caveats as the
     components loop).
     """
-    directed = edges.select(
-        F.col(src).alias("src"), F.col(dst).alias("dst")
-    ).persist()
-    try:
+    with pinned(
+        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+    ) as directed:
         n_edges = directed.count()
         if n_edges <= driver_threshold:
             return _pagerank_driver(directed, n_iter, damping)
-        nodes = (
+        with pinned(
             directed.select(F.col("src").alias("id"))
             .union(directed.select(F.col("dst").alias("id")))
             .distinct()
-            .persist()
-        )
-        try:
+        ) as nodes:
             n = nodes.count()
             # alias the degree key at its source: deg shares lineage
             # with `directed`, and a same-attribute join would trip the
-            # ambiguous-self-join check. Loop-invariant → persisted
-            # once, not re-aggregated every round.
-            deg = (
+            # ambiguous-self-join check. Loop-invariant → pinned once,
+            # not re-aggregated every round.
+            with pinned(
                 directed.select(F.col("src").alias("__deg_id"))
                 .groupBy("__deg_id")
                 .agg(F.count("*").alias("__deg"))
-                .persist()
-            )
-            ranks = nodes.withColumn("rank", F.lit(1.0 / n)).localCheckpoint(
-                eager=True
-            )
-            try:
+            ) as deg:
+                ranks = nodes.withColumn("rank", F.lit(1.0 / n)).localCheckpoint(
+                    eager=True
+                )
                 for round_no in range(n_iter):
                     # with_deg feeds two actions per round (dangling
-                    # mass, contribs) — persist so the ranks⋈deg join
+                    # mass, contribs) — pin it so the ranks⋈deg join
                     # runs once; released per round even on failure
-                    with_deg = (
+                    with pinned(
                         ranks.join(deg, ranks.id == deg["__deg_id"], "left")
                         .select("id", "rank", "__deg")
-                        .persist()
-                    )
-                    try:
+                    ) as with_deg:
                         dangling = with_deg.filter(F.col("__deg").isNull()).agg(
                             F.coalesce(F.sum("rank"), F.lit(0.0)).alias("m")
                         ).first()["m"]
@@ -300,20 +284,12 @@ def pagerank(
                             )
                             .localCheckpoint(eager=True)
                         )
-                    finally:
-                        with_deg.unpersist()
                     # same superseded-snapshot discipline as _propagate:
                     # localCheckpoint blocks fall to the ContextCleaner
                     # only after JVM GC of the old Dataset refs
                     if (round_no + 1) % 8 == 0:
                         directed.sparkSession.sparkContext._jvm.System.gc()
-            finally:
-                deg.unpersist()
             return ranks
-        finally:
-            nodes.unpersist()
-    finally:
-        directed.unpersist()
 
 
 def pagerank_ppm(
@@ -342,10 +318,9 @@ def pagerank_ppm(
     groupBy (node-id shuffles only) with localCheckpoint lineage
     discipline.  Returns ``(id, rank_ppm)``.
     """
-    directed = edges.select(
-        F.col(src).alias("src"), F.col(dst).alias("dst")
-    ).persist()
-    try:
+    with pinned(
+        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+    ) as directed:
         n_edges = directed.count()
         if n_edges <= driver_threshold:
             rows = directed.collect()
@@ -365,19 +340,15 @@ def pagerank_ppm(
                 [(v, rank[v]) for v in ids],
                 f"id {id_type}, rank_ppm bigint",
             )
-        nodes = (
+        with pinned(
             directed.select(F.col("src").alias("id"))
             .union(directed.select(F.col("dst").alias("id")))
             .distinct()
-            .persist()
-        )
-        deg = (
+        ) as nodes, pinned(
             directed.select(F.col("src").alias("__deg_id"))
             .groupBy("__deg_id")
             .agg(F.count("*").alias("__deg"))
-            .persist()
-        )
-        try:
+        ) as deg:
             ranks = nodes.withColumn(
                 "rank_ppm", F.lit(1_000_000).cast("long")
             ).localCheckpoint(eager=True)
@@ -403,11 +374,6 @@ def pagerank_ppm(
                     .localCheckpoint(eager=True)
                 )
             return ranks
-        finally:
-            deg.unpersist()
-            nodes.unpersist()
-    finally:
-        directed.unpersist()
 
 
 def _pagerank_driver(directed: DataFrame, n_iter: int, damping: float) -> DataFrame:
@@ -653,8 +619,7 @@ def k_core(
             .filter(F.col("u") != F.col("v"))
             .distinct()
         )
-    directed = directed.persist()
-    try:
+    with pinned(directed) as directed:
         n_edges = directed.count()
         if n_edges <= driver_threshold:
             return _k_core_driver(directed, k)
@@ -694,8 +659,6 @@ def k_core(
         raise RuntimeError(
             f"k_core did not converge in {max_iter} rounds; raise max_iter"
         )
-    finally:
-        directed.unpersist()
 
 
 def _k_core_driver(directed: DataFrame, k: int) -> DataFrame:
@@ -764,8 +727,7 @@ def core_numbers(
             .filter(F.col("u") != F.col("v"))
             .distinct()
         )
-    directed = directed.persist()
-    try:
+    with pinned(directed) as directed:
         n_edges = directed.count()
         if n_edges <= driver_threshold:
             return _core_numbers_driver(directed)
@@ -812,8 +774,6 @@ def core_numbers(
         raise RuntimeError(
             f"core_numbers did not converge in {max_iter} rounds"
         )
-    finally:
-        directed.unpersist()
 
 
 def _core_numbers_driver(directed: DataFrame) -> DataFrame:
@@ -874,7 +834,7 @@ def bfs_k_hops(
     the minimum (BFS invariant), and no node is ever expanded twice.
 
     Scale design:
-    - The undirected edge list is persisted once and drives every
+    - The undirected edge list is pinned once and drives every
       round; each round is ONE equi-join (frontier ⋈ edges on src) +
       distinct + left-anti against visited — all shuffle on node id,
       so a cluster that bucket-stores edges by src runs the join
@@ -896,12 +856,10 @@ def bfs_k_hops(
     materialization job per hop with no consumer besides the anti-join,
     which reads the same pinned blocks either way.
     """
-    und = (
+    with pinned(
         edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
         .union(edges.select(F.col(dst).alias("s"), F.col(src).alias("d")))
-        .persist()
-    )
-    try:
+    ) as und:
         frontier = (
             seeds.select(F.col(seed_col).alias("id")).distinct()
             .localCheckpoint(eager=True)
@@ -924,8 +882,6 @@ def bfs_k_hops(
         for lvl in levels[1:]:
             visited = visited.union(lvl)
         return visited.select("id", F.col("min_hops").cast("int").alias("min_hops"))
-    finally:
-        und.unpersist()
 
 
 def label_propagation_sync(
@@ -969,8 +925,7 @@ def label_propagation_sync(
     )
     if dedup_edges:
         und = und.distinct()
-    und = und.persist()
-    try:
+    with pinned(und) as und:
         labels = (
             und.select(F.col("s").alias("id")).distinct()
             .withColumn("label", F.col("id"))
@@ -995,8 +950,6 @@ def label_propagation_sync(
                 .localCheckpoint(eager=True)
             )
         return labels
-    finally:
-        und.unpersist()
 
 
 def bellman_k_hops(
@@ -1036,7 +989,7 @@ def bellman_k_hops(
     # duplicated edges with different weights relax to the same min —
     # so the old union().distinct() paid a full edge exchange for a
     # result-identical frame.
-    und = (
+    with pinned(
         edges.select(
             F.col(src).alias("s"), F.col(dst).alias("d"),
             F.col(weight).cast("bigint").alias("w"),
@@ -1047,9 +1000,7 @@ def bellman_k_hops(
                 F.col(weight).cast("bigint").alias("w"),
             )
         )
-        .persist()
-    )
-    try:
+    ) as und:
         dist = (
             seeds.select(F.col(seed_col).alias("id")).distinct()
             .withColumn("min_cost", F.lit(0).cast("bigint"))
@@ -1070,5 +1021,3 @@ def bellman_k_hops(
                 .localCheckpoint(eager=True)
             )
         return dist
-    finally:
-        und.unpersist()

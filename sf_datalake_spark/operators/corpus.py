@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from sf_datalake_spark.functions.text import tokenize, word_shingles
 from sf_datalake_spark.operators.split import hash_bucket
+from sf_datalake_spark.session import pinned
 
 
 def chunk_documents(
@@ -741,12 +742,11 @@ def greedy_coverage_select(
     algorithms; this operator is the exact greedy the sieve
     approximates.
     """
-    toks = tokens.select(
-        F.col(id_col).alias("id"), F.col(token_col).alias("tok")
-    ).distinct().persist()
     picks = []
     taken: list = []
-    try:
+    with pinned(tokens.select(
+        F.col(id_col).alias("id"), F.col(token_col).alias("tok")
+    ).distinct()) as toks:
         for rank in range(1, k + 1):
             cand = toks
             if taken:
@@ -776,5 +776,3 @@ def greedy_coverage_select(
             "new_tokens bigint, cumulative_coverage bigint",
         )
         return out
-    finally:
-        toks.unpersist()

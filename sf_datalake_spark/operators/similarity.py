@@ -22,6 +22,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from sf_datalake_spark.functions.vector import array_cosine_similarity
+from sf_datalake_spark.session import pinned
 
 
 def brute_force_topk(
@@ -515,12 +516,16 @@ def ivf_topk(
     from pyspark.ml.functions import array_to_vector
 
     n_probe = min(n_probe, n_cells)  # probing more cells than exist = full scan
-    corpus_v = corpus.select(
+    # KMeans iterations re-scan the corpus: pin it for the fit only;
+    # the single assignment pass below re-projects from source
+    with pinned(corpus.select(
         F.col(corpus_id).alias("neighbor_id"),
         F.col(vec_col).alias("__cv"),
         array_to_vector(F.col(vec_col)).alias("__v"),
-    ).cache()  # KMeans iterations re-scan the corpus; cache it once
-    model = KMeans(k=n_cells, seed=seed, featuresCol="__v", maxIter=8).fit(corpus_v)
+    )) as corpus_v:
+        model = KMeans(
+            k=n_cells, seed=seed, featuresCol="__v", maxIter=8
+        ).fit(corpus_v)
     assigned = model.transform(corpus_v).select(
         "neighbor_id", "__cv", F.col("prediction").alias("__cell")
     )
@@ -639,20 +644,17 @@ def semantic_dedup_pairs(
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
-    vecs = df.select(
+    # The pin exists for the fit's 8 iterations; the single downstream
+    # assignment pass re-projects from source instead of holding a
+    # cache entry open in a long-lived session.
+    with pinned(df.select(
         F.col(id_col).alias("__id"),
         F.col(vec_col).alias("__cv"),
         array_to_vector(F.col(vec_col)).alias("__v"),
-    ).cache()  # KMeans iterations re-scan; cache once
-    try:
+    )) as vecs:
         model = KMeans(
             k=n_clusters, seed=seed, featuresCol="__v", maxIter=8
         ).fit(vecs)
-    finally:
-        # The cache exists for the fit's 8 iterations; the single
-        # downstream assignment pass re-projects from source instead of
-        # holding a cache entry open in a long-lived session.
-        vecs.unpersist()
     assigned = model.transform(vecs).select(
         "__id", "__cv", F.col("prediction").alias("__cell")
     )

@@ -31,6 +31,7 @@ from pyspark.sql.types import StructType
 
 from sf_datalake_spark.io import load_data, write_data
 from sf_datalake_spark.operators.asof import merge_asof
+from sf_datalake_spark.session import scoped_confs
 
 
 @dataclass
@@ -149,18 +150,15 @@ def upsert_monthly_partitions(
     The 100 TB maintenance path: a monthly refresh rewrites one month's
     partition, not the table; readers keep pruning on ``period_col``.
     """
-    spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
+    with scoped_confs(
+        df.sparkSession, {"spark.sql.sources.partitionOverwriteMode": "dynamic"}
+    ):
         (
             df.write.mode("overwrite")
             .partitionBy(period_col)
             .format(file_format)
             .save(path)
         )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
 
 
 def semi_join_filter(

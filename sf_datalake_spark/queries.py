@@ -50,7 +50,7 @@ from sf_datalake_spark.operators.windows import (
     with_lag,
     with_moving_average,
 )
-
+from sf_datalake_spark.session import scoped_confs
 
 _NANOS_CONF = "spark.sql.legacy.parquet.nanosAsLong"
 
@@ -105,15 +105,8 @@ def _t_load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         try:
             df = spark.read.parquet(path)
         except Exception:
-            prev = spark.conf.get(_NANOS_CONF, None)
-            spark.conf.set(_NANOS_CONF, "true")
-            try:
+            with scoped_confs(spark, {_NANOS_CONF: "true"}):
                 df = spark.read.parquet(path)
-            finally:
-                if prev is None:
-                    spark.conf.unset(_NANOS_CONF)
-                else:
-                    spark.conf.set(_NANOS_CONF, prev)
         dt = dict(df.dtypes).get("ts")
         if dt == "bigint":
             # nanos-as-long → truncate to micros (integer division —

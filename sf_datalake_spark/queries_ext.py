@@ -20,6 +20,7 @@ from sf_datalake_spark.operators.windows import with_linear_interpolation
 from sf_datalake_spark.queries import (_t, customer_monthly_panel, _LSH_PAIRS_SQL,
                                        _PANEL_SQL, _SHINGLE_SQL,
                                        _TARGET_VARIABLE_SQL, _minhash_family_sql)
+from sf_datalake_spark.session import pinned
 
 
 # ---------------------------------------------------------------------------
@@ -1050,8 +1051,7 @@ def q_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     decoded = decode_images(docs)
     # persist: the resized frame feeds BOTH the decode-accounting gate
     # and the returned rows — decode is the codec-bound stage
-    resized = resize_images(decoded, 8, 8).persist()
-    try:
+    with pinned(resize_images(decoded, 8, 8)) as resized:
         # in-query decode accounting (r09 verdict #5): utf-8 payloads
         # all take the deterministic stub path (16×16×3), which never
         # skips a row — exactly ONE output shape, count == input count;
@@ -1071,8 +1071,6 @@ def q_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.md5("pixels").alias("pixels_md5"),
             F.lit("stub:16x16x3->8x8x3").alias("decode_path"),
         ).localCheckpoint(eager=True)
-    finally:
-        resized.unpersist()
     return out
 
 
@@ -1099,30 +1097,29 @@ def q_image_phash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persist the decoded frame: it feeds BOTH union branches, and
     # decode is the dominant (codec-bound) stage — without the cache
     # every action re-decodes the corpus twice
-    decoded = decode_images(docs).persist()
-    twin = decoded.withColumn(
-        "asset_id", F.col("asset_id") + F.lit(10_000_000)
-    ).withColumn(
-        "pixels",
-        F.concat(
-            F.expr("substring(pixels, 1, length(pixels) - 1)"),
-            F.lit(bytes([127])),
-        ),
-    )
-    hashes = image_phash(decoded.unionByName(twin)).withColumnRenamed(
-        "phash", "simhash"
-    )
-    pairs = simhash_near_dup_pairs(
-        hashes, "asset_id", max_hamming=6, bits=64
-    )
-    out = pairs.agg(
-        F.count("*").alias("n_pairs"),
-        F.sum((F.col("hamming") == 0).cast("long")).alias("n_exact"),
-        F.sum(
-            ((F.col("id_2") - F.col("id_1")) == 10_000_000).cast("long")
-        ).alias("n_twin_pairs"),
-    )
-    try:
+    with pinned(decode_images(docs)) as decoded:
+        twin = decoded.withColumn(
+            "asset_id", F.col("asset_id") + F.lit(10_000_000)
+        ).withColumn(
+            "pixels",
+            F.concat(
+                F.expr("substring(pixels, 1, length(pixels) - 1)"),
+                F.lit(bytes([127])),
+            ),
+        )
+        hashes = image_phash(decoded.unionByName(twin)).withColumnRenamed(
+            "phash", "simhash"
+        )
+        pairs = simhash_near_dup_pairs(
+            hashes, "asset_id", max_hamming=6, bits=64
+        )
+        out = pairs.agg(
+            F.count("*").alias("n_pairs"),
+            F.sum((F.col("hamming") == 0).cast("long")).alias("n_exact"),
+            F.sum(
+                ((F.col("id_2") - F.col("id_1")) == 10_000_000).cast("long")
+            ).alias("n_twin_pairs"),
+        )
         # Materialize the one-row census so the persist can be released
         # HERE — returning a lazy frame over the cache would leak one
         # cached RDD per invocation into the shared long-lived session.
@@ -1132,8 +1129,6 @@ def q_image_phash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
         return spark.createDataFrame(
             rows, "n_pairs bigint, n_exact bigint, n_twin_pairs bigint"
         )
-    finally:
-        decoded.unpersist()
 
 
 def q_sketches(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1513,21 +1508,18 @@ def q_ml_train_predict(spark: SparkSession, sf_dir: str) -> DataFrame:
     # model.transform each re-executed the whole panel+lag+label join
     # from parquet independently.  fit_ready's own (coalesced) cache
     # now fills from this one, and the test scan is a cache read.
-    assembled = VectorAssembler(
+    with pinned(VectorAssembler(
         inputCols=["revenue", "revenue_lag1m"], outputCol="features"
-    ).transform(labeled).persist()
-    try:
+    ).transform(labeled)) as assembled:
         train, test = hash_split(assembled, "custkey", test_fraction=0.3)
-        train, _ = fit_ready(train)
-        model = make_classifier("LogisticRegression", maxIter=10).fit(train)
-        train.unpersist()
+        with fit_ready(train) as (train, _):
+            model = make_classifier("LogisticRegression", maxIter=10).fit(train)
         # persist: the scored test frame feeds BOTH the in-query AUC gate
         # and the returned rows — without it the panel join re-executes
-        preds = model.transform(test).withColumn(
+        with pinned(model.transform(test).withColumn(
             "probability_1",
             F.round(F.element_at(vector_to_array("probability"), 2), 6),
-        ).persist()
-        try:
+        )) as preds:
             auc = binary_metrics(preds)["auc_roc"]
             if not 0.55 <= auc <= 1.0:
                 raise ValueError(
@@ -1541,10 +1533,6 @@ def q_ml_train_predict(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "custkey", "periode", "failure", "probability_1", "alert_level",
                 F.lit("auc_roc>=0.55").alias("auc_band"),
             ).localCheckpoint(eager=True)
-        finally:
-            preds.unpersist()
-    finally:
-        assembled.unpersist()
     return out
 
 
@@ -1609,8 +1597,7 @@ def q_calibration_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     # scan is a cache read.  The tiny (≤ n_bins-row) result is forced
     # with localCheckpoint before unpersisting (the ml_train_predict
     # hygiene pattern: no persisted frame outlives the query callable).
-    data = _calibration_data(spark, sf_dir).persist()
-    try:
+    with pinned(_calibration_data(spark, sf_dir)) as data:
         train = data.filter(F.col("__bucket") >= 3000)
         test = data.filter(F.col("__bucket") < 3000)
         coefs = irls_logistic_groups_ppm(
@@ -1630,8 +1617,6 @@ def q_calibration_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         return calibration_buckets_ppm(
             scored, n_bins=10, score_ppm_col="p_ppm", label_col="y"
         ).localCheckpoint(eager=True)
-    finally:
-        data.unpersist()
 
 
 def _calibration_curve_sql() -> str:
@@ -1771,15 +1756,14 @@ def q_linear_shap_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     labeled = panel.join(q_target_variable(spark, sf_dir), ["custkey", "periode"])
     feats = ["revenue", "revenue_lag1m"]
     assembled = VectorAssembler(inputCols=feats, outputCol="features").transform(labeled)
-    train, _ = fit_ready(assembled)
-    model = make_classifier("LogisticRegression", maxIter=10).fit(train)
-    try:
+    with fit_ready(assembled) as (train, _):
+        model = make_classifier("LogisticRegression", maxIter=10).fit(train)
         # Score the fit_ready-CACHED frame, not the raw lineage (r10,
         # guide §5): ``train`` holds exactly ``assembled``'s rows
         # (hash_split-free full fit), so transforming it is a cache
         # read, where transforming ``assembled`` re-executed the whole
         # panel+lag+label join from parquet a second time.  The 1-row
-        # result is forced with localCheckpoint inside the persist
+        # result is forced with localCheckpoint inside the fit_ready
         # scope (ml_train_predict hygiene); aggregates are order-free
         # exact counts, so partitioning differences cannot move them.
         preds = model.transform(train).withColumn(
@@ -1816,8 +1800,6 @@ def q_linear_shap_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
                  > 1e-9).cast("long")
             ).alias("n_credit_shifted"),
         ).localCheckpoint(eager=True)
-    finally:
-        train.unpersist()
 
 
 def q_resampled_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2016,11 +1998,10 @@ def q_tree_contributions(spark: SparkSession, sf_dir: str) -> DataFrame:
         inputCols=["revenue", "revenue_lag1m"], outputCol="features"
     ).transform(labeled)
     train, test = hash_split(assembled, "custkey", test_fraction=0.3)
-    train, _ = fit_ready(train)
-    model = make_classifier(
-        "RandomForestClassifier", numTrees=5, maxDepth=4, seed=42
-    ).fit(train)
-    train.unpersist()
+    with fit_ready(train) as (train, _):
+        model = make_classifier(
+            "RandomForestClassifier", numTrees=5, maxDepth=4, seed=42
+        ).fit(train)
     preds = model.transform(test).withColumn(
         "p1", F.element_at(vector_to_array("probability"), 2)
     )
@@ -2065,11 +2046,10 @@ def q_tree_shap_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
         inputCols=["revenue", "revenue_lag1m"], outputCol="features"
     ).transform(labeled)
     train, test = hash_split(assembled, "custkey", test_fraction=0.3)
-    train, _ = fit_ready(train)
-    model = make_classifier(
-        "RandomForestClassifier", numTrees=5, maxDepth=4, seed=42
-    ).fit(train)
-    train.unpersist()
+    with fit_ready(train) as (train, _):
+        model = make_classifier(
+            "RandomForestClassifier", numTrees=5, maxDepth=4, seed=42
+        ).fit(train)
     preds = model.transform(test).withColumn(
         "p1", F.element_at(vector_to_array("probability"), 2)
     )

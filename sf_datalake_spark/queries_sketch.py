@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sf_datalake_spark.queries import _t
+from sf_datalake_spark.session import pinned
 
 
 def q_hll_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -243,12 +244,9 @@ def q_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # vocabulary-sized) exact counts — which also yield n_total as
     # Σ exact_n, no separate words.count() scan — and one feeding the
     # sketch (the CMS aggregates raw occurrences by definition).
-    counts = words.groupBy("word").agg(F.count("*").alias("exact_n")).persist()
-    try:
+    with pinned(words.groupBy("word").agg(F.count("*").alias("exact_n"))) as counts:
         top = counts.orderBy(F.desc("exact_n"), "word").limit(10).collect()
         n_total = counts.agg(F.sum("exact_n")).collect()[0][0]
-    finally:
-        counts.unpersist()
     eps = 0.001
     ests = cms_estimate_counts(words, "word", [r["word"] for r in top], eps=eps)
     out = [

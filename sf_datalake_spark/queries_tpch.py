@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from sf_datalake_spark.queries import _t
+from sf_datalake_spark.session import pinned
 
 
 # ---------------------------------------------------------------------------
@@ -800,8 +801,7 @@ def q_grouped_models(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cache instead of re-executing the lineitem-agg + orders join from
     # parquet a second time.  The 5-row result is forced with
     # localCheckpoint before unpersisting (ml_train_predict hygiene).
-    data = _grouped_models_data(spark, sf_dir).persist()
-    try:
+    with pinned(_grouped_models_data(spark, sf_dir)) as data:
         coefs = irls_logistic_groups_ppm(
             data, "grp", "x1q", _GM_FX1, "x2q", _GM_FX2, "y",
             reg=_GM_REG, n_iter=_GM_ITER,
@@ -829,8 +829,6 @@ def q_grouped_models(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("grp").alias("o_orderpriority"),
             "group_n", "w0_ppm", "w1_ppm", "w2_ppm", "n_correct",
         ).localCheckpoint(eager=True)
-    finally:
-        data.unpersist()
 
 
 def _grouped_models_sql() -> str:

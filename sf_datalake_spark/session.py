@@ -10,9 +10,11 @@ timezone (deterministic date semantics vs external oracles).
 
 from __future__ import annotations
 
+import contextlib
 import os
+from collections.abc import Iterator
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
@@ -105,3 +107,45 @@ def get_spark_session(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+@contextlib.contextmanager
+def pinned(df: DataFrame) -> Iterator[DataFrame]:
+    """Persist ``df`` for the ``with`` block and unpersist it on exit,
+    also when the block raises, so a query leaves no cached plan behind
+    in the session.  Yields the persisted frame (``df`` itself).
+
+    Lineage-truncating ``localCheckpoint(eager=True)`` is not routed
+    through here: it is often the returned frame itself, and
+    ``unpersist()`` does not free its blocks (the ContextCleaner does,
+    once the JVM Dataset is garbage-collected), so it has no release to
+    scope."""
+    df = df.persist()
+    try:
+        yield df
+    finally:
+        df.unpersist()
+
+
+@contextlib.contextmanager
+def scoped_confs(spark: SparkSession, confs: dict[str, str]) -> Iterator[None]:
+    """Set session confs for the ``with`` block, then restore them, also
+    when the block raises.  A key that was unset before is unset again:
+    ``spark.conf.get`` would report Spark's default for it, and writing
+    that back would leave an explicit setting in the session, so the
+    before-state comes from the map behind ``spark.conf.getAll``, which
+    lists explicit settings only.  It is read per key: ``getAll``
+    converts the whole map at one py4j round trip per entry (12.6 ms
+    against 0.2 ms for two keys on a 4-core local session)."""
+    explicit = spark.conf._jconf.getAllAsJava()
+    saved = {k: explicit.get(k) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, prev in saved.items():
+            if prev is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, prev)

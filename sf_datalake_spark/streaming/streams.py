@@ -19,39 +19,18 @@ kafka in production — the query shape is identical.
 
 from __future__ import annotations
 
-import contextlib
 from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-
-@contextlib.contextmanager
-def _pinned_confs(spark: SparkSession, confs: dict[str, str]):
-    """Set session confs while a streaming query starts + drains, then
-    restore them (unset keys are restored by explicit unset)."""
-    saved: dict[str, str | None] = {}
-    for k, v in confs.items():
-        try:
-            saved[k] = spark.conf.get(k)
-        except Exception:
-            saved[k] = None
-        spark.conf.set(k, v)
-    try:
-        yield
-    finally:
-        for k, prev in saved.items():
-            if prev is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, prev)
+from sf_datalake_spark.session import pinned, scoped_confs
 
 
-@contextlib.contextmanager
 def _state_partitions(spark: SparkSession, n: int | None):
     """Pin ``spark.sql.shuffle.partitions`` while a streaming query
-    starts, then restore it (a :func:`_pinned_confs` special case).
+    starts, then restore it (a :func:`scoped_confs` special case).
 
     The number of state-store partitions is fixed by the shuffle
     setting at CHECKPOINT CREATION and never changes afterwards, so it
@@ -65,9 +44,9 @@ def _state_partitions(spark: SparkSession, n: int | None):
     expected live state bytes / 256 MB, rounded to the executor-core
     multiple — for the local test corpus that is single-digit.
     """
-    confs = {} if n is None else {"spark.sql.shuffle.partitions": str(n)}
-    with _pinned_confs(spark, confs):
-        yield
+    return scoped_confs(
+        spark, {} if n is None else {"spark.sql.shuffle.partitions": str(n)}
+    )
 
 
 def read_file_stream(
@@ -404,7 +383,7 @@ def run_to_memory(
         extra["spark.sql.streaming.noDataMicroBatches.enabled"] = "false"
     if "TransformWithState" in stream._jdf.queryExecution().logical().toString():
         extra["spark.sql.streaming.stateStore.providerClass"] = _ROCKSDB_PROVIDER
-    with _pinned_confs(stream.sparkSession, extra), _state_partitions(
+    with scoped_confs(stream.sparkSession, extra), _state_partitions(
         stream.sparkSession, state_partitions
     ):
         q = (
@@ -513,10 +492,9 @@ def run_near_dup_gate(
     def gate(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         batch = batch_df.select(id_col, text_col)
-        sig_new = minhash_signature(
+        with pinned(minhash_signature(
             batch, id_col, text_col, num_hashes=num_hashes, shingle_n=3
-        ).persist()
-        try:
+        )) as sig_new:
             if os.path.exists(corpus_path):
                 sig_base = spark.read.parquet(corpus_path)
                 matches = lsh_pairs_against(
@@ -552,8 +530,6 @@ def run_near_dup_gate(
             appended.write.mode("overwrite").parquet(staging)
             shutil.rmtree(corpus_path, ignore_errors=True)
             os.replace(staging, corpus_path)
-        finally:
-            sig_new.unpersist()
 
     with _state_partitions(stream.sparkSession, state_partitions):
         q = (
@@ -661,12 +637,9 @@ def run_bloom_gate(
         spark = batch_df.sparkSession
         batch = batch_df.select(id_col, F.md5(F.col(text_col)).alias("fp"))
         # within-batch exact dedup: earliest id per fingerprint wins
-        batch = (
-            batch.groupBy("fp")
-            .agg(F.min(id_col).alias(id_col))
-            .persist()
-        )
-        try:
+        with pinned(
+            batch.groupBy("fp").agg(F.min(id_col).alias(id_col))
+        ) as batch:
             if os.path.exists(sketch_path):
                 sketch = spark.read.parquet(sketch_path)
                 gated = bloom_maybe_contains(
@@ -699,8 +672,6 @@ def run_bloom_gate(
             for staging, path in stagings:
                 shutil.rmtree(path, ignore_errors=True)
                 os.replace(staging, path)
-        finally:
-            batch.unpersist()
 
     with _state_partitions(stream.sparkSession, state_partitions):
         q = (

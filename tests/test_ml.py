@@ -192,18 +192,16 @@ def test_fit_ready_right_sizes_partitions(spark):
     from sf_datalake_spark.ml import fit_ready
 
     df = spark.range(0, 1000).repartition(32)
-    out, n = fit_ready(df, target_rows_per_partition=250)
-    assert n == 1000
-    assert out.rdd.getNumPartitions() == 4
-    assert out.count() == 1000
-    out.unpersist()
+    with fit_ready(df, target_rows_per_partition=250) as (out, n):
+        assert n == 1000
+        assert out.rdd.getNumPartitions() == 4
+        assert out.count() == 1000
 
     # already narrow enough: returned as-is (no widening coalesce)
     small = spark.range(0, 10).coalesce(2)
-    out2, n2 = fit_ready(small, target_rows_per_partition=1)
-    assert n2 == 10
-    assert out2.rdd.getNumPartitions() == 2
-    out2.unpersist()
+    with fit_ready(small, target_rows_per_partition=1) as (out2, n2):
+        assert n2 == 10
+        assert out2.rdd.getNumPartitions() == 2
 
 
 def test_calibration_buckets_hand_case(spark):

@@ -110,18 +110,43 @@ def test_registry_outputs_are_scalar_typed(spark):
     scalar-typed columns: no ArrayType / MapType / StructType anywhere
     in the output schema.  Lazy queries only pay plan analysis here;
     the handful of documented eager (driver-adaptive / collect-inside)
-    queries run at sf0.001, the smallest fixture."""
+    queries run at sf0.001, the smallest fixture.
+
+    The same pass checks that building a query leaves no state behind
+    in the session: no CacheManager entry (a pin that outlives the
+    query) and no changed conf (a temporary setting that was not
+    restored, or was restored as an explicit setting).  After each
+    query the conf snapshot is restored and the cache cleared, so one
+    query's leftovers do not hide the next one's."""
     from pyspark.sql import types as T
 
     import __spark_entry__ as entry
 
     sf = "/root/testdata/sf0.001"
-    bad, errs = {}, {}
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    bad, errs, leaks = {}, {}, {}
     for name, fn in entry.queries().items():
+        confs = dict(spark.conf.getAll)
         try:
             schema = fn(spark, sf).schema
         except Exception as exc:  # noqa: BLE001 — collect all, report once
             errs[name] = repr(exc)[:200]
+            schema = None
+        now = dict(spark.conf.getAll)
+        left = sorted(k for k in confs.keys() | now.keys()
+                      if confs.get(k) != now.get(k))
+        if not cache_manager.isEmpty():
+            left.append("cache entry")
+        if left:
+            leaks[name] = left
+        for k in now.keys() - confs.keys():
+            spark.conf.unset(k)
+        for k, v in confs.items():
+            if now.get(k) != v:
+                spark.conf.set(k, v)
+        spark.catalog.clearCache()
+        if schema is None:
             continue
         complex_cols = [
             f.name for f in schema.fields
@@ -130,6 +155,7 @@ def test_registry_outputs_are_scalar_typed(spark):
         if complex_cols:
             bad[name] = complex_cols
     assert not errs, f"queries failed during schema build: {errs}"
+    assert not leaks, f"queries left state in the session: {leaks}"
     assert not bad, (
         "non-scalar output columns would reach the driver's pandas "
         f"canonicalizer (unhashable cells): {bad}"
